@@ -43,12 +43,6 @@ class DedupConfig:
     # --- skew control ---
     bucket_cap: int = 64          # max docs per (band,bucket) before salting kicks in
     salt_buckets: int = 16        # salt fan-out for hot buckets / hot labels
-    # hot-bucket stats slice: collected to the driver and re-broadcast as a
-    # literal when measured under this row count (saves recomputing + re-
-    # shuffling the full bucket-stats aggregation for each of its three
-    # consumers); above it the per-consumer broadcast subtree is kept —
-    # bounded driver memory either way
-    hot_collect_limit: int = 100_000
 
     # --- execution ---
     shuffle_partitions: int = 32

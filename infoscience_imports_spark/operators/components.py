@@ -135,6 +135,13 @@ def connected_components(
     spark = edges.sparkSession
     cur = _symmetrize(edges).localCheckpoint(eager=True)
     n_edges = cur.count()  # cheap: counts the checkpointed RDD
+    if n_edges == 0:
+        # no edge, no assignment: limit 0 folds to an empty JVM relation —
+        # no job and no Python worker, for every duplicate-free input
+        return cur.select(
+            F.col("u").cast("long").alias("doc_id"),
+            F.col("v").cast("long").alias("cluster_id"),
+        ).limit(0)
     if n_edges <= cfg.cc_local_max_edges:
         # Arrow collect in ONE parallel job — toLocalIterator would fetch the
         # 2*shuffle_partitions partitions as sequential jobs, making this
@@ -145,8 +152,6 @@ def connected_components(
 
         pdf = cur.toPandas()
         assignments = _local_union_find(zip(pdf["u"].to_numpy(), pdf["v"].to_numpy()))
-        if not assignments:
-            return spark.createDataFrame([], "doc_id long, cluster_id long")
         out = pd.DataFrame(assignments, columns=["doc_id", "cluster_id"])
         return spark.createDataFrame(out.astype("int64"))
 

@@ -15,9 +15,9 @@ Distributed plan (no O(n^2), no stored shingle sets, no driver-side data):
      ``text_norm`` in an Arrow kernel (CPU scales with cores; re-reading a
      stored posting table does not) and prefiltered map-side against a
      **Bloom bitmap** of the bottom-k hash set before they ever hit a
-     shuffle. The bitmap is built distributed (per-partition bitmaps OR-ed
-     with a treeReduce) so the driver only ever holds one fixed-size buffer
-     — never the hash set itself (round-1 verdict #2: a distinct().collect()
+     shuffle. The bitmap is built by a JVM-only ``bit_or`` aggregation into
+     64-bit words, so the driver only ever holds one fixed-size buffer —
+     never the hash set itself (round-1 verdict #2: a distinct().collect()
      here is tens of GB at 10^9+ docs). Bloom false positives are removed by
      the exact hash equi-join that follows;
   2. verify — one Arrow kernel per candidate pair over the two normalized
@@ -37,7 +37,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StructField,
@@ -58,14 +57,19 @@ _POSTINGS_SCHEMA = StructType(
     ]
 )
 
-_MIX = np.uint64(0x9E3779B97F4A7C15)  # Fibonacci hashing constant (public)
-
 
 def _bloom_positions(u: np.ndarray, m_bits: int) -> tuple[np.ndarray, np.ndarray]:
-    """Two bit positions per uint64 value; shared by builder and prober."""
+    """Two bit positions per uint64 value; shared by builder and prober.
+
+    Shift/xor only (no multiply), so the Spark SQL builder in
+    :func:`build_bloom` computes the same positions under ANSI arithmetic,
+    where a wrapping 64-bit multiply raises ``ARITHMETIC_OVERFLOW``. ``p1`` is
+    the low bits; ``p2`` folds bits 29+ over a shifted copy of the low bits,
+    so it stays spread even for bottom-k values whose top bits are zero.
+    """
     mask = np.uint64(m_bits - 1)
     p1 = u & mask
-    p2 = ((u >> np.uint64(29)) ^ (u * _MIX)) & mask
+    p2 = ((u >> np.uint64(29)) ^ (u << np.uint64(7))) & mask
     return p1, p2
 
 
@@ -77,44 +81,33 @@ def _bloom_test(bitmap: np.ndarray, u: np.ndarray, m_bits: int) -> np.ndarray:
 
 
 def build_bloom(hashes: DataFrame, col: str, n_items: int, bits_per_item: int = 16) -> tuple[bytes, int]:
-    """Distributed Bloom bitmap over a long column.
+    """Bloom bitmap over a long column, built by Spark SQL on the JVM.
 
-    Each partition folds its values into a local bitmap inside an Arrow
-    kernel; the per-partition bitmaps (fixed size, one row each) are OR-ed
-    with an executor-side ``treeReduce``. Driver memory is bounded by the
-    bitmap size (<= 16 MB) regardless of corpus cardinality.
+    Both bit positions of every value (:func:`_bloom_positions`, in column
+    form) explode into one column, and ``bit_or`` folds them into 64-bit
+    words grouped by ``p >> 6`` — a partial aggregate map-side, so the
+    exchange carries at most one word per partition and word. The driver
+    collects at most ``m_bits / 64`` (word index, word) rows and scatters
+    them into the byte bitmap (little-endian words are exactly the prober's
+    ``p >> 3`` / ``p & 7`` byte layout). Driver memory is bounded by the
+    bitmap size (<= 16 MB) plus the collected rows (12 bytes per 8-byte
+    word), regardless of corpus cardinality.
     """
     m_bits = 1 << max(13, int(max(1, n_items * bits_per_item) - 1).bit_length())
     m_bits = min(m_bits, 1 << 27)  # cap at 16 MB
-    n_bytes = m_bits // 8
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bitmap = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in batches:
-            u = pdf[col].to_numpy().astype(np.int64).view(np.uint64)
-            for p in _bloom_positions(u, m_bits):
-                vals = (np.uint8(1) << (p & np.uint64(7)).astype(np.uint8)).astype(np.uint8)
-                np.bitwise_or.at(bitmap, (p >> np.uint64(3)).astype(np.int64), vals)
-        yield pd.DataFrame({"bitmap": [bitmap.tobytes()]})
-
-    # bound the reduce fan-in: one bitmap per partition means N_splits x
-    # bitmap_bytes through the treeReduce — with byte-sized scan splits that
-    # anti-scales (measured 0.6 s -> 3.1 s from 2 to 8 cores at 100k pages).
-    # The fold itself is trivial CPU, so cap the folding partitions at the
-    # cluster parallelism.
-    sc = hashes.sparkSession.sparkContext
-    src = hashes.select(F.col(col).alias(col))
-    if src.rdd.getNumPartitions() > sc.defaultParallelism:
-        src = src.coalesce(sc.defaultParallelism)
-    parts = src.mapInPandas(
-        kernel, schema=StructType([StructField("bitmap", BinaryType(), False)])
+    mask = F.lit(m_bits - 1)
+    u = F.col(col)
+    p1 = u.bitwiseAND(mask)
+    p2 = F.shiftrightunsigned(u, 29).bitwiseXOR(F.shiftleft(u, 7)).bitwiseAND(mask)
+    words = (
+        hashes.select(F.explode(F.array(p1, p2)).alias("p"))
+        .groupBy(F.shiftright("p", 6).cast("int").alias("w"))
+        .agg(F.expr("bit_or(shiftleft(1L, int(p & 63)))").alias("bits"))
+        .toPandas()
     )
-    merged = parts.rdd.map(lambda r: r[0]).treeReduce(
-        lambda a, b: np.bitwise_or(
-            np.frombuffer(a, dtype=np.uint8), np.frombuffer(b, dtype=np.uint8)
-        ).tobytes()
-    )
-    return bytes(merged), m_bits
+    bitmap = np.zeros(m_bits // 64, dtype="<u8")
+    bitmap[words["w"].to_numpy(dtype=np.int64)] = words["bits"].to_numpy(dtype=np.int64).view(np.uint64)
+    return bitmap.view(np.uint8).tobytes(), m_bits
 
 
 def _shingle_postings(texts: DataFrame, cfg: DedupConfig, bloom_bc, m_bits: int) -> DataFrame:

@@ -8,13 +8,13 @@ docs sharing any band bucket become candidate pairs — one shuffle keyed by
 combinations are emitted map-side (no self-join; round 4).
 
 Skew story (north_rule: "salted keys to defuse hot-bucket skew"):
-  - buckets are counted first; buckets <= cap pair all-vs-all (pair
-    generation is quadratic only within a bucket);
+  - every bucket's size and min/max doc_id come from one window aggregation
+    over the single (band, bucket) exchange; buckets <= cap pair all-vs-all
+    (pair generation is quadratic only within a bucket);
   - hot buckets (boilerplate pages land here) switch to bounded-degree *star
-    pairing* against the ``hub_count`` smallest doc_ids — this preserves
+    pairing* against their min/max doc_ids — this preserves
     connectivity for the components stage (what dedup needs) without the
-    O(c^2) blowup;
-  - AQE skew-join splitting stays on for residual imbalance.
+    O(c^2) blowup.
 
 Also hosts the SimHash band path for short title-like fields: Manku-style
 block-combination tables (radius+3 blocks, keys over every 3-combination of
@@ -26,7 +26,7 @@ corpus^2/2^16 blowup of single 16-bit bands — and a JVM-side
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig, DEFAULT_CONFIG
@@ -74,88 +74,60 @@ def pair_combinations_expr(col: str = "members") -> Column:
 def candidate_pairs(buckets: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
     """(band, bucket, doc_id) -> distinct (id1, id2) with id1 < id2.
 
-    Hot-bucket detection uses ONE stats pass (count + min/max doc_id per
-    bucket) whose hot slice is **broadcast** once, carrying the hub ids with
-    it. Hot buckets degrade to star pairing against their min/max doc_id
-    hubs (map-side broadcast join + inline hub explode over the RAW bucket
-    table — no partitioning requirement, so no exchange). Non-hot buckets
-    are provably <= ``bucket_cap`` docs after the anti-join, so intra-bucket
-    pairing needs no join at all: each bucket collects into a BOUNDED array
-    and the C(c,2) combinations are emitted map-side by higher-order
-    functions (round 4 — this replaced a shuffle-hash SELF-JOIN: the join's
-    per-partition hash relation over the full bucket table was both the
-    memory hazard at web scale and wasted bytes locally; the array form is
-    spill-friendly ObjectHashAggregate and measured shuffle write/read
-    96.8/126.8 MB -> 60.7/60.7 MB on the same 50k-page corpus with CPU
-    parity within host noise — interleaved A/B series in BENCH/BASELINE.md,
-    pair-set identity checked at 50k and 200k pages).
+    Lazy: building the frame submits no Spark job. The bucket table is
+    exchanged ONCE, by ``repartition("band", "bucket")``; everything below
+    runs on that partitioning (both branches read the one exchange through
+    exchange reuse):
 
-    The earlier lazy ``localCheckpoint`` of a pre-repartitioned bucket table
-    was REMOVED in the same change: its LogicalRDD erases output
-    partitioning, so every consumer re-exchanged anyway — the checkpoint
-    paid a disk round-trip to defeat its own purpose (visible as an extra
-    ENSURE_REQUIREMENTS exchange in the round-3 plan captures).
+    1. per-bucket stats — size + min/max doc_id — are window aggregates over
+       ``partitionBy("band", "bucket")``, attached to every row of the
+       bucket. The partitioning already satisfies the window, so this adds
+       a sort within partitions and no exchange, join or broadcast (a
+       groupBy + join-back of the same stats measured 2.4 vs 1.4 s and 63
+       vs 31 tasks at 2k pages on 4 cores: column pruning gave each
+       consumer its own exchange of the bucket table, and AQE broadcast the
+       join sides);
+    2. buckets with ``bsize <= bucket_cap`` collect into a BOUNDED sorted
+       array whose C(c,2) combinations are emitted map-side by higher-order
+       functions (:func:`pair_combinations_expr`) — no self-join, so no
+       per-partition hash relation over the full bucket table;
+    3. hot buckets (boilerplate pages land here) degrade to star pairing
+       against their min/max doc_id hubs (``h1``/``h2``): bounded degree,
+       connectivity kept for the components stage, no O(c^2) blowup. A
+       mega-bucket is one window group, buffered with spill to disk, so its
+       cost stays linear in its rows.
 
-    NOT fully lazy: the hot-slice probe below runs a bounded Spark job
-    (limit+1 collect) at plan-construction time. Callers building
-    speculative plans pay that probe even if the returned frame is never
-    executed; it is one stats aggregation over the bucket table.
+    Hot-bucket detection is thereby part of the plan, not a driver probe: no
+    hot slice is collected or broadcast, and the driver never holds bucket
+    data.
     """
-    # NB (round 6): persisting this repartitioned frame so the probe job and
-    # the caller's action share the exchange was tried and REVERTED — the
-    # interleaved A/B read 7.5 s vs 6.8 s per edges stage WITH the persist
-    # (cache build + AQE-less cached subtree cost more than the re-exchange
-    # of these narrow rows saves). Numbers in OPTIMIZATION_r06.md.
-    pre = buckets.repartition("band", "bucket")
-    stats = pre.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("bsize"),
-        F.min("doc_id").alias("h1"),
-        F.max("doc_id").alias("h2"),
+    w = Window.partitionBy("band", "bucket")
+    sized = buckets.repartition("band", "bucket").select(
+        "band",
+        "bucket",
+        "doc_id",
+        F.count(F.lit(1)).over(w).alias("bsize"),
+        F.min("doc_id").over(w).alias("h1"),
+        F.max("doc_id").over(w).alias("h2"),
     )
-    hot = stats.filter(F.col("bsize") > cfg.bucket_cap).select("band", "bucket", "h1", "h2")
-    # The hot slice has TWO broadcast consumers (the anti-join + the star
-    # join). Left as a plan subtree, each broadcast build re-aggregates and
-    # re-shuffles the full bucket table — and bucket keys are near-unique on
-    # non-duplicate content, so the partial agg barely compresses that
-    # shuffle (measured round 3: one full-table stats exchange per consumer,
-    # zero reuse). One bounded collect turns both into literal broadcasts;
-    # corpora with a pathological hot-bucket count (measured, not guessed:
-    # limit+1 probe) keep the subtree form — driver memory is bounded
-    # either way.
-    hot_rows = hot.limit(cfg.hot_collect_limit + 1).collect()
-    if len(hot_rows) <= cfg.hot_collect_limit:
-        hot = buckets.sparkSession.createDataFrame(hot_rows, schema=hot.schema)
 
-    small = pre.join(
-        F.broadcast(hot.select("band", "bucket")), on=["band", "bucket"], how="left_anti"
-    )
-    # Non-hot buckets hold <= bucket_cap docs (the anti-join guarantees it),
-    # so intra-bucket pairing needs no join: collect each bucket into a
-    # BOUNDED array (<= cap elements — a mega-bucket can never reach this
-    # aggregate) and emit the C(c,2) combinations map-side with higher-order
-    # functions. The explicit repartition feeds the collect_list agg its
-    # required partitioning in ONE exchange; Catalyst pushes the broadcast
-    # anti-join below it, so the exchange carries only cold-bucket rows.
     # collect_set, not collect_list: duplicate (band, bucket, doc_id) input
     # rows would otherwise place a doc next to itself in the sorted array
     # and the strict i < j combination emits an id1 == id2 self-pair — a
-    # bogus edge that verifies at jaccard 1.0. The replaced self-join's
-    # doc_id < doc_id filter suppressed these; the set keeps the rewrite's
-    # contract identical to the join under any input (and is still bounded:
-    # |set| <= |list| <= bucket_cap).
+    # bogus edge that verifies at jaccard 1.0. The set is still bounded:
+    # |set| <= bsize <= bucket_cap.
     members = F.sort_array(F.collect_set("doc_id"))
-    pair_expr = pair_combinations_expr()
     small_pairs = (
-        small.groupBy("band", "bucket")
+        sized.filter(F.col("bsize") <= cfg.bucket_cap)
+        .groupBy("band", "bucket")
         .agg(members.alias("members"))
-        .select(F.explode(pair_expr).alias("p"))
+        .select(F.explode(pair_combinations_expr()).alias("p"))
         .select("p.id1", "p.id2")
     )
 
-    # hot buckets: star pairing against the two hubs carried in the broadcast
-    # stats slice — map-side join + inline hub explode, no second aggregation
+    # hot buckets: star pairing against the two hubs carried on every row
     big_pairs = (
-        buckets.join(F.broadcast(hot), on=["band", "bucket"])
+        sized.filter(F.col("bsize") > cfg.bucket_cap)
         .select(
             "doc_id",
             F.explode(F.array_distinct(F.array("h1", "h2"))).alias("hub_id"),
@@ -273,14 +245,3 @@ def simhash_candidate_pairs(
         simhash_band_pairs(signatures, cfg), cfg.broadcast_pair_limit
     )
     return hamming_edges(pairs, signatures, cfg, gated=gated)
-
-
-def simhash_edges(signatures, cfg: DedupConfig = DEFAULT_CONFIG):
-    """SimHash pairs as edge rows (score = 1 - hamming/64, rule='simhash')."""
-    pairs = simhash_candidate_pairs(signatures, cfg)
-    return pairs.select(
-        "id1",
-        "id2",
-        (F.lit(1.0) - F.col("hamming") / F.lit(64.0)).alias("jaccard"),
-        F.lit("simhash").alias("rule"),
-    )

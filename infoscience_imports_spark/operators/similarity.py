@@ -328,6 +328,8 @@ def similar_pairs_lsh(
     ).collect()[0]
     n = int(row["rows"]) // max(1, bands)
     if row["cand"] >= 0.5 * n * (n - 1) / 2:
+        # the fallback never reads the band table again
+        banded.unpersist()
         return similar_pairs(corpus, threshold, id_c=id_c, vec_c=vec_c)
 
     # O(corpus) on both sides: pin a shuffle join (same rationale as the

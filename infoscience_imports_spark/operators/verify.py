@@ -120,82 +120,6 @@ def jaccard_verify(
     )
 
 
-def jaccard_verify_text(
-    pairs: DataFrame,
-    texts: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    rule: str = "minhash",
-) -> DataFrame:
-    """Exact-Jaccard verify that recomputes shingle sets from ``text_norm``.
-
-    Scale path used by the checkpointed pipeline: shingle sets are ~8 bytes
-    per token; storing them and joining them back means every verify pass
-    pays a disk scan that does NOT shrink with added executors, while
-    recomputing them is a vectorized Arrow kernel that scales linearly with
-    cores. Same hash kernels as the signature stage, so results are
-    bit-identical to the array-based :func:`jaccard_verify`.
-
-    ``texts`` carries (doc_id, text_norm). The narrow pair list goes through
-    the size-gated broadcast (``gate_broadcast``) into both text joins.
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from ..functions.shingles import shingle_hashes, token_hashes
-
-    t = texts.select("doc_id", "text_norm")
-    joined = (
-        gate_broadcast(pairs.select("id1", "id2"), cfg.broadcast_pair_limit)
-        .join(t.select(F.col("doc_id").alias("id1"), F.col("text_norm").alias("_t1")), on="id1")
-        .join(t.select(F.col("doc_id").alias("id2"), F.col("text_norm").alias("_t2")), on="id2")
-    )
-    k = cfg.shingle_k
-    out_schema = StructType(
-        [
-            StructField("id1", LongType(), False),
-            StructField("id2", LongType(), False),
-            StructField("jaccard", DoubleType(), True),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            memo: dict[str, int] = {}
-            sh_cache: dict[int, object] = {}  # doc-level: hubs shingled once/batch
-
-            def shingles_of(doc_id, text):
-                key = int(doc_id)
-                got = sh_cache.get(key)
-                if got is None:
-                    got = shingle_hashes(
-                        token_hashes(text.split() if isinstance(text, str) else [], memo), k
-                    )
-                    sh_cache[key] = got
-                return got
-
-            jac = np.zeros(len(pdf), dtype=np.float64)
-            for i, (i1, i2, t1, t2) in enumerate(
-                zip(pdf["id1"], pdf["id2"], pdf["_t1"], pdf["_t2"])
-            ):
-                s1 = shingles_of(i1, t1)
-                s2 = shingles_of(i2, t2)
-                if s1.size == 0 and s2.size == 0:
-                    jac[i] = 0.0
-                    continue
-                inter = np.intersect1d(s1, s2, assume_unique=True).size
-                jac[i] = inter / (s1.size + s2.size - inter)
-            yield pd.DataFrame({"id1": pdf["id1"], "id2": pdf["id2"], "jaccard": jac})
-
-    return (
-        joined.mapInPandas(kernel, schema=out_schema)
-        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-        .select("id1", "id2", "jaccard", F.lit(rule).alias("rule"))
-    )
-
-
 def verify_tagged_pairs(
     tagged_pairs: DataFrame,
     texts: DataFrame,
@@ -211,9 +135,10 @@ def verify_tagged_pairs(
     separate operators scans the extract table twice more and pays a second
     Arrow kernel pass (measured: the split version held the edges stage at
     1.4x from 2 to 8 cores; this unification + a persisted text frame is what
-    the stage needed to scale). Semantics are byte-identical to
-    :func:`jaccard_verify_text` / ``containment.containment_edges``: same
-    hash kernels, same thresholds, same exact-substring check.
+    the stage needed to scale). Semantics are byte-identical to the
+    array-based :func:`jaccard_verify` (minhash) and
+    ``containment.containment_edges`` (contain): same hash kernels, same
+    thresholds, same exact-substring check.
     """
     from collections.abc import Iterator
 

@@ -228,47 +228,26 @@ class DedupPipeline:
         # edges 8.2 s -> 11.0 s at 20k pages. Shuffle COUNT is not the
         # bottleneck here; concurrent stage occupancy is.
         #
-        # The three family CONSTRUCTORS each run bounded eager driver jobs
-        # (hot-slice probe collects; the containment Bloom treeReduce)
-        # before the gated count job ever starts. Serially those probes
-        # measured 0.96 + 0.88 + 1.35 s at 20k pages on 32 cores — none of
-        # them fills the machine, so they back-fill each other from a small
-        # thread pool (guide §2.6 "overlap independent jobs").
-        # inheritable_thread_target propagates the caller's job group to
-        # the pool threads, keeping bench fingerprint attribution intact.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
-        def _build_minhash():
-            return lsh.candidate_pairs(buckets, self.cfg).select(
-                "id1", "id2", F.lit("minhash").alias("rule")
-            )
-
-        def _build_contain():
-            return cont.containment_candidates(
-                reps,
-                rep_texts,
-                self.cfg,
-                n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
-            ).select(
-                F.col("small_id").alias("id1"),
-                F.col("big_id").alias("id2"),
-                F.lit("contain").alias("rule"),
-            )
-
-        def _build_simhash():
-            return lsh.simhash_band_pairs(reps, self.cfg).select(
-                "id1", "id2", F.lit("simhash").alias("rule")
-            )
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_mh = pool.submit(inheritable_thread_target(_build_minhash))
-            f_ct = pool.submit(inheritable_thread_target(_build_contain))
-            f_sh = pool.submit(inheritable_thread_target(_build_simhash))
-            minhash_pairs = f_mh.result()
-            contain_cand = f_ct.result()
-            sim_pairs = f_sh.result()
+        # The family constructors run no Spark job of their own except the
+        # containment Bloom build (one JVM aggregation + bounded collect):
+        # both candidate_pairs calls are lazy, so all candidate work lands in
+        # the gated count job below.
+        minhash_pairs = lsh.candidate_pairs(buckets, self.cfg).select(
+            "id1", "id2", F.lit("minhash").alias("rule")
+        )
+        contain_cand = cont.containment_candidates(
+            reps,
+            rep_texts,
+            self.cfg,
+            n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
+        ).select(
+            F.col("small_id").alias("id1"),
+            F.col("big_id").alias("id2"),
+            F.lit("contain").alias("rule"),
+        )
+        sim_pairs = lsh.simhash_band_pairs(reps, self.cfg).select(
+            "id1", "id2", F.lit("simhash").alias("rule")
+        )
         # ONE gated candidate frame for all three fuzzy rules: a single
         # persist+count job evaluates the minhash/containment/simhash
         # candidate subtrees concurrently (independent stages of one job fill
@@ -372,8 +351,8 @@ class DedupPipeline:
             for cached in self._stage_persists:
                 cached.unpersist()
             self._stage_persists.clear()
-            # operator-internal tracked persists (candidate_pairs' bucket
-            # cache) are scoped to the stage that created them
+            # operator-internal tracked persists (the containment sketch
+            # table) are scoped to the stage that created them
             from .. import caching as _caching
 
             _caching.release_all()

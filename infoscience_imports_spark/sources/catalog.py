@@ -21,7 +21,9 @@ a manifest table — the store keeps that swap behind one class
 The Iceberg *table contract* itself is implemented and tested here, not just
 claimed: every commit appends to an atomic per-stage snapshot log
 (``snapshot-log.json`` — the metadata-file analogue) carrying
-``snapshot_id``, ``parent_id``, operation and summary; old snapshots stay
+``snapshot_id``, ``parent_id``, operation, summary and the committed schema
+(reads pass it to the scan, so no read pays a schema-inference job — the log
+sits beside the snapshot dirs, not inside them); old snapshots stay
 readable (time travel by snapshot id or timestamp) until
 ``expire_snapshots``; ``merge_into`` is a copy-on-write MERGE INTO with
 schema evolution (new source columns are added, absent ones preserved).
@@ -40,6 +42,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def chain_fingerprint(*parts: str) -> str:
@@ -162,7 +165,7 @@ class CheckpointStore:
         # per-file lineage from the committed bytes (not the logical plan).
         # The checksum hashes the key column (order-insensitive sum) — full
         # row hashing would re-read every wide column a second time per stage.
-        written = self.spark.read.parquet(data_dir)
+        written = self.spark.read.schema(df.schema).parquet(data_dir)
         key = F.col(key_col) if key_col and key_col in written.columns else F.lit(None)
         # group on the raw file name; the tmp-dir -> final-path rewrite is a
         # per-FILE string fix applied after aggregation (a regexp_replace
@@ -251,6 +254,7 @@ class CheckpointStore:
                 "rows": total,
                 "run_id": self.run_id,
                 "path": snap,
+                "schema": df.schema.json(),
             },
         )
         ptr_tmp = self._latest_file(stage) + ".tmp"
@@ -259,11 +263,26 @@ class CheckpointStore:
         os.replace(ptr_tmp, self._latest_file(stage))
         return SnapshotInfo(stage, fingerprint, snap, total, snap_id)
 
+    def _read_data(self, snap: str, entry: dict | None) -> DataFrame:
+        """Scan a snapshot's data files with the schema its log entry
+        recorded at commit — no schema-inference job. Entries written before
+        the log carried a schema fall back to inference."""
+        reader = self.spark.read
+        if entry is not None and "schema" in entry:
+            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
+        return reader.parquet(os.path.join(snap, "data"))
+
     def read(self, stage: str, fingerprint: str | None = None) -> DataFrame:
         fp = fingerprint or self.latest_fingerprint(stage)
         if fp is None:
             raise FileNotFoundError(f"no committed snapshot for stage {stage!r}")
-        return self.spark.read.parquet(os.path.join(self._snap_dir(stage, fp), "data"))
+        # the live entry of this fingerprint is the newest one: a re-commit
+        # marks every earlier entry of the same fingerprint expired
+        entry = next(
+            (e for e in reversed(self.snapshots(stage)) if e["fingerprint"] == fp),
+            None,
+        )
+        return self._read_data(self._snap_dir(stage, fp), entry)
 
     # -- time travel (Iceberg VERSION AS OF / TIMESTAMP AS OF) -----------------
     def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
@@ -278,7 +297,7 @@ class CheckpointStore:
                             else ""
                         )
                     )
-                return self.spark.read.parquet(os.path.join(e["path"], "data"))
+                return self._read_data(e["path"], e)
         raise FileNotFoundError(f"stage {stage!r} has no snapshot {snapshot_id}")
 
     def read_as_of(self, stage: str, timestamp_iso: str) -> DataFrame:

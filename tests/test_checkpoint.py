@@ -1,5 +1,6 @@
 """Resumability + lineage tests (SURVEY.md §5 pyramid level 4)."""
 
+import json
 import os
 import shutil
 import tempfile
@@ -154,6 +155,9 @@ def test_merge_into_upsert_and_schema_evolution(spark):
     assert rows["k3"]["year"] is None
     # unmatched insert
     assert rows["k3"]["title"] == "t3"
+    # the merge snapshot's log entry carries the evolved schema
+    logged = json.loads(store.snapshots("pubs")[-1]["schema"])
+    assert "source" in [f["name"] for f in logged["fields"]]
     # snapshot log records the merge and the pre-merge version still reads
     ops = [e["operation"] for e in store.snapshots("pubs")]
     assert ops == ["replace", "merge"]
@@ -163,6 +167,35 @@ def test_merge_into_upsert_and_schema_evolution(spark):
     store.merge_into("pubs", src, key_col="pub_id")
     rows2 = {r["pub_id"]: r for r in store.read("pubs").collect()}
     assert rows2["k2"]["seen_count"] == 3 and rows2["k1"]["seen_count"] == 1
+    shutil.rmtree(wh)
+
+
+def test_read_uses_logged_schema_without_inference_job(spark, jobs_submitted):
+    """A commit records its schema in the snapshot log, so read() and
+    read_snapshot() build the scan without a schema-inference job; a log
+    entry without a schema (older warehouse) still reads by inference."""
+    wh = tempfile.mkdtemp(prefix="wh-ck9-")
+    store = CheckpointStore(spark, wh)
+    df = spark.createDataFrame(
+        [(1, "a", [1, 2]), (2, None, [])], "id long, v string, a array<long>"
+    )
+    store.write("tbl", df, "fp1", key_col="id")
+    (latest, by_id), jobs = jobs_submitted(
+        lambda: (store.read("tbl"), store.read_snapshot("tbl", 1))
+    )
+    assert jobs == []
+    inferred = spark.read.parquet(os.path.join(store._snap_dir("tbl", "fp1"), "data"))
+    assert latest.schema == by_id.schema == inferred.schema
+    assert sorted(latest.collect()) == sorted(inferred.collect())
+
+    log = store._log_file("tbl")
+    with open(log) as f:
+        entries = json.load(f)
+    del entries[0]["schema"]
+    with open(log, "w") as f:
+        json.dump(entries, f)
+    assert sorted(r["id"] for r in store.read("tbl").collect()) == [1, 2]
+    assert store.read_snapshot("tbl", 1).schema == inferred.schema
     shutil.rmtree(wh)
 
 

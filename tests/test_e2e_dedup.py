@@ -275,21 +275,82 @@ def test_width_scale_widens_groups_and_dedups_clean(spark):
     pages.unpersist()
 
 
-def test_candidate_pairs_no_self_pairs_on_duplicate_bucket_rows(spark):
+def test_candidate_pairs_no_self_pairs_on_duplicate_bucket_rows(spark, jobs_submitted):
     """Regression (round-5 ADVICE): duplicate (band, bucket, doc_id) input
     rows must not produce id1 == id2 self-pairs from the array-based pair
     generator — the replaced self-join's strict doc_id< filter suppressed
-    them, and the rewrite's contract must match under any input."""
+    them, and the rewrite's contract must match under any input.
+
+    A bucket above ``bucket_cap`` (also with a duplicate row) pairs as a star
+    against its min/max doc_id hubs, next to the all-pairs small buckets,
+    and building the frame submits no Spark job (hot-bucket detection is
+    part of the plan, not a driver probe)."""
     from infoscience_imports_spark.operators.lsh import candidate_pairs
 
     rows = [
         (0, "b0", 1), (0, "b0", 1), (0, "b0", 2),   # dup row for doc 1
         (1, "b1", 3), (1, "b1", 3),                  # bucket with ONLY a dup row
         (2, "b2", 4),
-    ]
+    ] + [(3, "hot", d) for d in (10, 11, 12, 12, 13, 14)]  # 6 rows > cap 3
     buckets = spark.createDataFrame(rows, "band int, bucket string, doc_id bigint")
-    got = {(r["id1"], r["id2"]) for r in candidate_pairs(buckets).collect()}
-    assert got == {(1, 2)}, got
+    pairs, jobs = jobs_submitted(
+        lambda: candidate_pairs(buckets, DedupConfig(bucket_cap=3))
+    )
+    assert jobs == []
+    got = {(r["id1"], r["id2"]) for r in pairs.collect()}
+    star = {(10, d) for d in (11, 12, 13, 14)} | {(d, 14) for d in (10, 11, 12, 13)}
+    assert got == {(1, 2)} | star, got
+
+
+def test_build_bloom_matches_numpy_reference(spark):
+    """The SQL-built Bloom bitmap is bit-for-bit the NumPy fold of the
+    prober's positions (negative values and bit 63 included), has no false
+    negatives, and keeps the false-positive rate at 16 bits/item <= 2%."""
+    import numpy as np
+    import pandas as pd
+
+    from infoscience_imports_spark.operators.containment import (
+        _bloom_positions,
+        _bloom_test,
+        build_bloom,
+    )
+
+    rng = np.random.default_rng(11)
+    i64 = np.iinfo(np.int64)
+    vals = rng.integers(i64.min, i64.max, 20_000, dtype=np.int64, endpoint=True)
+    vals[:4] = [i64.min, -1, 0, i64.max]
+    assert (vals < 0).sum() > 5_000  # bit 63 set on a good share
+    df = spark.createDataFrame(pd.DataFrame({"sh": vals}))
+    bitmap, m_bits = build_bloom(df, "sh", len(vals), bits_per_item=16)
+
+    u = vals.view(np.uint64)
+    ref = np.zeros(m_bits // 8, dtype=np.uint8)
+    for p in _bloom_positions(u, m_bits):
+        bits = (np.uint8(1) << (p & np.uint64(7)).astype(np.uint8)).astype(np.uint8)
+        np.bitwise_or.at(ref, (p >> np.uint64(3)).astype(np.int64), bits)
+    assert bitmap == ref.tobytes()
+
+    bm = np.frombuffer(bitmap, dtype=np.uint8)
+    assert _bloom_test(bm, u, m_bits).all()
+    probes = rng.integers(i64.min, i64.max, 200_000, dtype=np.int64, endpoint=True)
+    probes = probes[~np.isin(probes, vals)]
+    fpr = _bloom_test(bm, probes.view(np.uint64), m_bits).mean()
+    assert fpr <= 0.02, fpr
+
+
+def test_connected_components_empty_edges(spark):
+    """No edges -> 0 assignments with the (doc_id long, cluster_id long)
+    schema, as an empty JVM relation (no Python-side empty frame)."""
+    from infoscience_imports_spark.operators.components import connected_components
+
+    edges = spark.range(0).select(F.col("id").alias("id1"), F.col("id").alias("id2"))
+    out = connected_components(edges, DedupConfig())
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("doc_id", "bigint"),
+        ("cluster_id", "bigint"),
+    ]
+    assert "LocalRelation" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert out.collect() == []
 
 
 def test_duplicate_pairs_bounded_and_correct(spark):

@@ -25,7 +25,6 @@ FORCED_ABOVE_GATE = DedupConfig(
     broadcast_pair_limit=0,   # signatures window rep_id + shuffle verify join
     cc_local_max_edges=0,     # distributed large-star/small-star components
     salt_min_edges=0,         # salted hub joins inside every CC iteration
-    hot_collect_limit=0,      # hot-slice subtree broadcast (no driver collect)
 )
 
 

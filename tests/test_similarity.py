@@ -78,6 +78,26 @@ def test_lsh_pairs_recall_and_precision(spark, planted):
     assert recall >= 0.97, (len(got), len(truth))
 
 
+def test_lsh_density_fallback_leaves_no_persist(spark, planted):
+    """1-bit bands are dense enough to trip the density gate; the fallback
+    to the blocked kernel must not leave the persisted band table behind."""
+    from pyspark.storagelevel import StorageLevel
+
+    from infoscience_imports_spark import caching
+
+    df, sims = planted
+    n_tracked = len(caching._REGISTRY)
+    got = {
+        (r["id1"], r["id2"])
+        for r in similar_pairs_lsh(
+            df, threshold=0.9, dim=DIM, bands=4, rows_per_band=1
+        ).collect()
+    }
+    assert got == _true_pairs(sims, 0.9)  # the exact blocked kernel answered
+    left = [d for d in caching._REGISTRY[n_tracked:] if d.storageLevel != StorageLevel.NONE]
+    assert left == []
+
+
 def test_multiprobe_beats_single_probe(spark, planted):
     df, sims = planted
     queries = df.filter(F.col("vec_id") < N_BASE).limit(25).select(
