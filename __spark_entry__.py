@@ -428,10 +428,7 @@ def q_containment_substring(spark, sf_dir):
     contract and mirrored in the oracle."""
     from dataclasses import replace
 
-    from infoscience_imports_spark.operators.containment import (
-        containment_candidates,
-        containment_edges,
-    )
+    from infoscience_imports_spark.operators.containment import containment_candidates
 
     cfg = replace(CFG, containment_threshold=1.0)
     docs = _cached(
@@ -444,8 +441,10 @@ def q_containment_substring(spark, sf_dir):
         sg.select("doc_id", "bottomk", "n_shingles"),
         docs.select("doc_id", "text_norm"),
         cfg,
+    ).select(
+        F.col("small_id").alias("id1"), F.col("big_id").alias("id2"), F.lit("contain").alias("rule")
     )
-    return containment_edges(cand, docs, cfg).select(
+    return verify.verify_tagged_pairs(cand, docs, cfg).select(
         "id1", "id2", F.round("jaccard", 6).alias("containment")
     )
 

@@ -20,11 +20,13 @@ Distributed plan (no O(n^2), no stored shingle sets, no driver-side data):
      never the hash set itself (round-1 verdict #2: a distinct().collect()
      here is tens of GB at 10^9+ docs). Bloom false positives are removed by
      the exact hash equi-join that follows;
-  2. verify — one Arrow kernel per candidate pair over the two normalized
-     texts: shingle-containment score |S_B ∩ S_A| / |S_B| plus the exact
-     Python substring check. This is the "suffix-array pass" semantics —
-     exact substring — at candidate-pair cardinality, where a direct check
-     beats maintaining a distributed suffix array.
+  2. verify — candidates are tagged ``contain`` and verified by
+     ``verify.verify_tagged_pairs``: one Arrow kernel per candidate pair
+     over the two normalized texts, shingle-containment score
+     |S_B ∩ S_A| / |S_B| plus the exact substring check. This is the
+     "suffix-array pass" semantics — exact substring — at candidate-pair
+     cardinality, where a direct check beats maintaining a distributed
+     suffix array.
 """
 
 from __future__ import annotations
@@ -36,18 +38,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..caching import persist_tracked
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions.shingles import shingle_hashes, token_hashes
-from ..functions.substring import contains_substring
-from .verify import gate_broadcast
 
 _POSTINGS_SCHEMA = StructType(
     [
@@ -148,6 +143,16 @@ def _shingle_postings(texts: DataFrame, cfg: DedupConfig, bloom_bc, m_bits: int)
     return texts.select("doc_id", "text_norm").mapInPandas(kernel, schema=_POSTINGS_SCHEMA)
 
 
+def _sketch_rows(signatures: DataFrame) -> DataFrame:
+    """(doc_id, n_shingles, bottomk) -> one (small_id, small_n, sh) row per
+    bottom-k hash: the small side of the containment probe."""
+    return signatures.select(
+        F.col("doc_id").alias("small_id"),
+        F.col("n_shingles").alias("small_n"),
+        F.explode("bottomk").alias("sh"),
+    )
+
+
 def containment_candidates(
     signatures: DataFrame,
     texts: DataFrame,
@@ -167,34 +172,14 @@ def containment_candidates(
     free from the checkpoint manifest) sizes the Bloom bitmap without paying
     a separate count job; only the upper bound matters for the fp rate.
     """
-    k = cfg.bottomk
-    bk = signatures.select(
-        F.col("doc_id").alias("small_id"),
-        F.col("n_shingles").alias("small_n"),
-        F.explode("bottomk").alias("sh"),
-    )
-    bk = persist_tracked(bk)
+    bk = persist_tracked(_sketch_rows(signatures))
     if n_docs_hint is not None:
         n_bk = n_docs_hint * cfg.bottomk
     else:
         n_bk = bk.count()
     if n_bk == 0:
         return bk.select(F.col("small_id"), F.col("small_id").alias("big_id")).limit(0)
-    bitmap, m_bits = build_bloom(bk, "sh", n_bk, cfg.bloom_bits_per_item)
-    bloom_bc = texts.sparkSession.sparkContext.broadcast(bitmap)
-    postings = _shingle_postings(texts, cfg, bloom_bc, m_bits)
-
-    matched = (
-        bk.join(postings, on="sh")
-        .filter(F.col("small_id") != F.col("big_id"))
-        # strict containment direction: small into strictly larger set
-        .filter(F.col("big_n") > F.col("small_n"))
-        .groupBy("small_id", "big_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= F.least(F.lit(cfg.bottomk_min_match), F.lit(k)))
-        .select("small_id", "big_id")
-    )
-    return matched
+    return _shared_pairs(_containment_matches(bk, texts, cfg, n_bk), cfg)
 
 
 def _containment_matches(
@@ -210,6 +195,26 @@ def _containment_matches(
     bloom_bc = texts.sparkSession.sparkContext.broadcast(bitmap)
     postings = _shingle_postings(texts, cfg, bloom_bc, m_bits)
     return bk.join(postings, on="sh")
+
+
+def _shared_pairs(matches: DataFrame, cfg: DedupConfig, distinct: bool = False) -> DataFrame:
+    """Match rows -> (small_id, big_id) pairs sharing at least
+    ``min(bottomk_min_match, bottomk)`` sketch hashes, small strictly
+    smaller. ``distinct`` drops repeated (small_id, big_id, sh) triples
+    before the count (matches unioned from two probe directions)."""
+    m = (
+        matches.filter(F.col("small_id") != F.col("big_id"))
+        # strict containment direction: small into strictly larger set
+        .filter(F.col("big_n") > F.col("small_n"))
+    )
+    if distinct:
+        m = m.select("small_id", "big_id", "sh").distinct()
+    return (
+        m.groupBy("small_id", "big_id")
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .filter(F.col("shared") >= F.least(F.lit(cfg.bottomk_min_match), F.lit(cfg.bottomk)))
+        .select("small_id", "big_id")
+    )
 
 
 def containment_candidates_scoped(
@@ -241,88 +246,16 @@ def containment_candidates_scoped(
     kernel). Old-old pairs are excluded by the inductive watermark contract
     (see ``IncrementalNearDedup.compact``).
     """
-    k = cfg.bottomk
     probe = probe_docs.select("doc_id")
     texts = texts.select("doc_id", "text_norm")
     texts_new = texts.join(probe, on="doc_id", how="left_semi")
-    bk_cols = lambda df: df.select(  # noqa: E731
-        F.col("doc_id").alias("small_id"),
-        F.col("n_shingles").alias("small_n"),
-        F.explode("bottomk").alias("sh"),
+    bk_new = persist_tracked(
+        _sketch_rows(signatures.join(probe, on="doc_id", how="left_semi"))
     )
-    bk_new = persist_tracked(bk_cols(
-        signatures.join(probe, on="doc_id", how="left_semi")
-    ))
-    bk_all = persist_tracked(bk_cols(signatures))
+    bk_all = persist_tracked(_sketch_rows(signatures))
     b = _containment_matches(bk_new, texts, cfg, bk_new.count())
     a = _containment_matches(bk_all, texts_new, cfg, bk_all.count())
 
     # distinct BEFORE the shared-hash count: a new-new pair appears in both
     # directions and double-counting would inflate `shared` past the gate
-    matched = (
-        a.unionByName(b)
-        .filter(F.col("small_id") != F.col("big_id"))
-        .filter(F.col("big_n") > F.col("small_n"))
-        .select("small_id", "big_id", "sh")
-        .distinct()
-        .groupBy("small_id", "big_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= F.least(F.lit(cfg.bottomk_min_match), F.lit(k)))
-        .select("small_id", "big_id")
-    )
-    return matched
-
-
-_VERIFY_SCHEMA = StructType(
-    [
-        StructField("id1", LongType(), False),
-        StructField("id2", LongType(), False),
-        StructField("jaccard", DoubleType(), True),
-    ]
-)
-
-
-def containment_edges(
-    candidates: DataFrame,
-    texts: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Verified containment edges (id1, id2, score=containment, rule).
-
-    One Arrow kernel computes the shingle-containment screen AND the exact
-    substring check per candidate pair — no stored arrays, two text joins.
-    """
-    t = texts.select("doc_id", "text_norm")
-    with_texts = (
-        gate_broadcast(candidates.select("small_id", "big_id"), cfg.broadcast_pair_limit)
-        .join(t.select(F.col("doc_id").alias("small_id"), F.col("text_norm").alias("_ts")), on="small_id")
-        .join(t.select(F.col("doc_id").alias("big_id"), F.col("text_norm").alias("_tb")), on="big_id")
-    )
-    k = cfg.shingle_k
-    thr = cfg.containment_threshold
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            memo: dict[str, int] = {}
-            out_i1, out_i2, out_c = [], [], []
-            for sid, bid, ts, tb in zip(pdf["small_id"], pdf["big_id"], pdf["_ts"], pdf["_tb"]):
-                if not isinstance(ts, str) or not isinstance(tb, str):
-                    continue
-                ss = shingle_hashes(token_hashes(ts.split(), memo), k)
-                if ss.size == 0:
-                    continue
-                sb = shingle_hashes(token_hashes(tb.split(), memo), k)
-                inter = np.intersect1d(ss, sb, assume_unique=True).size
-                containment = inter / ss.size
-                # Rabin-Karp exact check — bounded worst case (verify.py twin)
-                if containment >= thr and contains_substring(ts, tb):
-                    out_i1.append(min(int(sid), int(bid)))
-                    out_i2.append(max(int(sid), int(bid)))
-                    out_c.append(float(containment))
-            yield pd.DataFrame({"id1": out_i1, "id2": out_i2, "jaccard": out_c})
-
-    return (
-        with_texts.mapInPandas(kernel, schema=_VERIFY_SCHEMA)
-        .withColumn("rule", F.lit("contain"))
-        .distinct()
-    )
+    return _shared_pairs(a.unionByName(b), cfg, distinct=True)

@@ -35,26 +35,11 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 def band_buckets(signatures: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
     """signatures -> (doc_id, band, bucket) — one row per (doc, band).
 
-    Fast path: the signature kernel pre-computes the band keys
-    (``bands`` column, operators/signatures.py ``band_keys``), so this stage
-    is a pure narrow-column explode. Fallback (snapshots written before the
-    column existed): key = xxhash64(band index, the r signature values),
-    computed JVM-side from the stored ``minhash`` array.
+    The signature kernel pre-computes the band keys (``bands`` column,
+    operators/signatures.py ``band_keys``), so this stage is a pure
+    narrow-column explode.
     """
-    if "bands" in signatures.columns:
-        return signatures.select(
-            "doc_id", F.posexplode("bands").alias("band", "bucket")
-        )
-    r = cfg.lsh_rows
-    bucket_cols = F.array(
-        *[
-            F.xxhash64(F.lit(i), F.slice(F.col("minhash"), i * r + 1, r))
-            for i in range(cfg.lsh_bands)
-        ]
-    )
-    return signatures.select(
-        "doc_id", F.posexplode(bucket_cols).alias("band", "bucket")
-    )
+    return signatures.select("doc_id", F.posexplode("bands").alias("band", "bucket"))
 
 
 def pair_combinations_expr(col: str = "members") -> Column:

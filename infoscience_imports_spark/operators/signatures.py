@@ -3,7 +3,9 @@
 One Arrow ``mapInPandas`` pass per input partition computes, per doc:
   - sorted unique 63-bit 5-gram shingle hashes (kept for the exact-Jaccard
     verify join, which then runs JVM-side via array_intersect),
-  - 128-perm MinHash signature (NumPy kernel, functions/minhash.py),
+  - 128-perm MinHash signature (NumPy kernel, functions/minhash.py), folded
+    in-kernel into the LSH band keys (``bands``) — the raw signature is
+    never emitted,
   - SimHash64 of the title-like field (first ``title_tokens`` tokens),
   - content digest (xxhash64 of normalized text — computed JVM-side before
     the UDF) for the exact-duplicate fast path, the web-scale analogue of the
@@ -41,7 +43,6 @@ from ..functions.text import normalize_text_col
 SIGNATURE_FIELDS = [
     StructField("doc_id", LongType(), False),
     StructField("digest", LongType(), True),
-    StructField("minhash", ArrayType(LongType(), False), True),
     StructField("bands", ArrayType(LongType(), False), True),
     StructField("simhash64", LongType(), True),
     StructField("bottomk", ArrayType(LongType(), False), True),
@@ -158,7 +159,6 @@ def compute_signatures(
             out = {
                 "doc_id": pdf["doc_id"].to_numpy(),
                 "digest": pdf["digest"].to_numpy(),
-                "minhash": minhashes,
                 "bands": bands,
                 "simhash64": simhashes,
                 "bottomk": bottomks,

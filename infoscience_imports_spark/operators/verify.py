@@ -8,8 +8,13 @@ Reference parity:
     which is what keeps the HOT/boilerplate class linear);
   - Jaccard verify == the reference's fuzzy verification
     (``rapidfuzz partial_ratio >= 80``, ``data_pipeline/enricher.py:197``)
-    made exact: candidates join back to their stored shingle sets and the
-    Jaccard is computed JVM-side with array_intersect — no Python, no UDF.
+    made exact, in two forms: :func:`verify_tagged_pairs` recomputes
+    shingle sets from the two normalized texts in one Arrow kernel and
+    verifies minhash AND containment candidates in the same pass (the batch
+    pipeline and deep compaction, via operators/edges.py); callers that
+    already hold shingle arrays in memory (the streaming micro-batch, the
+    entry MinHash queries) use :func:`jaccard_verify`, which computes the
+    Jaccard JVM-side with array_intersect — no Python, no UDF.
 """
 
 from __future__ import annotations
@@ -23,8 +28,10 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 EDGE_COLUMNS = ["id1", "id2", "jaccard", "rule"]
 
 
-def gate_broadcast(pairs: DataFrame, limit_rows: int) -> DataFrame:
-    """Broadcast a candidate-pair frame iff its *measured* size allows it.
+def gate_broadcast_info(pairs: DataFrame, limit_rows: int) -> tuple[DataFrame, bool]:
+    """Broadcast a candidate-pair frame iff its *measured* size allows it;
+    returns (frame, small) so callers can chain further joins under the
+    same size bound.
 
     The pair list is persisted (narrow — two longs a row) and counted once;
     under ``limit_rows`` it gets the broadcast hint (the wide shingle/text
@@ -37,13 +44,6 @@ def gate_broadcast(pairs: DataFrame, limit_rows: int) -> DataFrame:
     The persist also de-duplicates work: callers reference the pair frame in
     two join branches, which would otherwise re-run candidate generation.
     """
-    frame, _small = gate_broadcast_info(pairs, limit_rows)
-    return frame
-
-
-def gate_broadcast_info(pairs: DataFrame, limit_rows: int) -> tuple[DataFrame, bool]:
-    """:func:`gate_broadcast` plus the gate's decision, for callers that
-    chain further joins under the same size bound."""
     pairs = persist_tracked(pairs)
     n = pairs.count()
     small = n <= limit_rows
@@ -88,11 +88,11 @@ def jaccard_verify(
     the pair frame and owns its unpersist — long-running callers (streaming
     micro-batches) must not leak one internal gate persist per batch."""
     sig = signatures.select("doc_id", "shingles", "n_shingles")
-    # size-gated broadcast of the narrow pair list (gate_broadcast): small
-    # lists stream the wide shingle arrays through both joins shuffle-free,
-    # large ones fall back to shuffle joins + AQE
+    # size-gated broadcast of the narrow pair list (gate_broadcast_info):
+    # small lists stream the wide shingle arrays through both joins
+    # shuffle-free, large ones fall back to shuffle joins + AQE
     joined = (
-        (pairs if pregated else gate_broadcast(pairs, cfg.broadcast_pair_limit))
+        (pairs if pregated else gate_broadcast_info(pairs, cfg.broadcast_pair_limit)[0])
         .join(
             sig.select(
                 F.col("doc_id").alias("id1"),
@@ -135,10 +135,12 @@ def verify_tagged_pairs(
     separate operators scans the extract table twice more and pays a second
     Arrow kernel pass (measured: the split version held the edges stage at
     1.4x from 2 to 8 cores; this unification + a persisted text frame is what
-    the stage needed to scale). Semantics are byte-identical to the
-    array-based :func:`jaccard_verify` (minhash) and
-    ``containment.containment_edges`` (contain): same hash kernels, same
-    thresholds, same exact-substring check.
+    the stage needed to scale). The minhash rows are byte-identical to the
+    array-based :func:`jaccard_verify` (same hash kernels and threshold);
+    a ``contain`` row passes when |S_1 ∩ S_2| / |S_1| reaches
+    ``containment_threshold`` AND text 1 is an exact substring of text 2,
+    and is emitted as (min id, max id). Callers with only ``contain``
+    candidates (the containment entry query) tag them and call this too.
     """
     from collections.abc import Iterator
 
@@ -159,11 +161,9 @@ def verify_tagged_pairs(
     # pregated=True: the caller already persisted/counted/hinted the pair
     # frame (the pipeline gates ONE unioned candidate frame for all rules —
     # one count job instead of one per consumer)
-    pairs = (
-        tagged_pairs.select("id1", "id2", "rule")
-        if pregated
-        else gate_broadcast(tagged_pairs.select("id1", "id2", "rule"), cfg.broadcast_pair_limit)
-    )
+    pairs = tagged_pairs.select("id1", "id2", "rule")
+    if not pregated:
+        pairs = gate_broadcast_info(pairs, cfg.broadcast_pair_limit)[0]
     joined = (
         pairs
         .join(t.select(F.col("doc_id").alias("id1"), F.col("text_norm").alias("_t1")), on="id1")

@@ -14,9 +14,10 @@ Physical-plan notes (designed for 100 TB, verified on local[32]):
     generation;
   * candidate joins are keyed by (band, bucket) with hot buckets degraded to
     bounded-degree star pairing (operators/lsh.py) + AQE skew splitting;
-  * Jaccard verification is JVM-side (array_intersect on stored shingle
-    sets) — Python appears only in the Arrow signature kernel and the final
-    substring check on containment survivors;
+  * the three fuzzy rule families are composed by one operator
+    (operators/edges.py ``edge_families``, shared with streaming deep
+    compaction) and verified in the Arrow text kernel, which recomputes
+    shingle sets from ``text_norm`` — no shingle sets are stored;
   * components are iterative large-star/small-star self-joins with salted
     hub keys (operators/components.py).
 """
@@ -29,12 +30,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import persist_tracked, release_all
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..operators import components as comp
-from ..operators import containment as cont
 from ..operators import lsh
 from ..operators import signatures as sigs
 from ..operators import verify
+from ..operators.edges import edge_families
 from ..functions.text import extract_text_col, normalize_text_col
 from ..sources.catalog import CheckpointStore, chain_fingerprint
 
@@ -64,7 +66,6 @@ class DedupPipeline:
         self.cfg = cfg
         self.cfg_fp = chain_fingerprint(repr(sorted(cfg.to_dict().items())))
         self.input_fp = input_fingerprint
-        self._stage_persists: list[DataFrame] = []
         # measured gate inputs of the last run (soak/scale evidence):
         # candidate_pairs vs broadcast_pair_limit decides broadcast-vs-shuffle
         # verify; sym edge count vs cc_local_max_edges decides local-vs-
@@ -141,7 +142,7 @@ class DedupPipeline:
         ``is_rep`` (min doc_id of each digest group) is computed FIRST, from
         the digest alone (pure JVM xxhash64 + partial-agg min), and the
         expensive Arrow kernel then runs on REPRESENTATIVES ONLY: a
-        duplicate follower's minhash/bands/simhash/bottomk columns are never
+        duplicate follower's bands/simhash/bottomk columns are never
         read downstream (candidate generation filters ``is_rep``; exact
         edges need only ``rep_id``), so at a 30%-exact-dup web corpus this
         skips 30% of the pipeline's single most CPU-expensive kernel.
@@ -166,20 +167,10 @@ class DedupPipeline:
         else:
             with_rep = keyed.join(mins, on="digest")
         reps = with_rep.filter(F.col("doc_id") == F.col("rep_id"))
-        # a representative IS its own rep by definition — no join-back needed.
-        # The raw 128-perm minhash array is DROPPED before the snapshot
-        # write: every downstream consumer reads the derived columns (bands
-        # for bucketing, simhash64/bottomk for the other rules; verify
-        # recomputes shingles from text), so the only reader of the stored
-        # array is band_buckets' legacy-snapshot fallback. At ~1 KB/doc of
-        # near-incompressible values it dominated the snapshot row — pure
-        # dead write (the streaming docsig state made the same call,
-        # streaming/incremental.py:339-352).
-        sg_reps = (
-            sigs.compute_signatures(reps, self.cfg, include_shingles=False)
-            .withColumn("rep_id", F.col("doc_id"))
-            .drop("minhash")
-        )
+        # a representative IS its own rep by definition — no join-back needed
+        sg_reps = sigs.compute_signatures(
+            reps, self.cfg, include_shingles=False
+        ).withColumn("rep_id", F.col("doc_id"))
         followers = with_rep.filter(F.col("doc_id") != F.col("rep_id")).select(
             "doc_id",
             "digest",
@@ -204,76 +195,25 @@ class DedupPipeline:
         return lsh.band_buckets(reps, self.cfg)
 
     def _edges(self, signatures: DataFrame, buckets: DataFrame, extract_df: DataFrame) -> DataFrame:
-        from pyspark.storagelevel import StorageLevel
-
         reps = self._representatives(signatures)
-        # candidate-generation reads narrow columns only (column pruning on
-        # the signature parquet); every verify recomputes shingles from
-        # text_norm (scale rationale in operators/signatures.py).
         # rep_texts feeds three consumers (containment postings + the two
         # text joins of the unified verify) — persist it once instead of
-        # re-scanning the extract snapshot per consumer.
-        rep_texts = (
+        # re-scanning the extract snapshot per consumer; run() drains it
+        # after the stage write
+        rep_texts = persist_tracked(
             extract_df.join(reps.select("doc_id"), on="doc_id", how="left_semi")
             .select("doc_id", "text_norm")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        self._stage_persists.append(rep_texts)
-        exact = verify.exact_edges(signatures)
-        # NB: one unified candidate_pairs over a banded union of both LSH
-        # families was tried (round 3) and REVERTED: the per-family subtrees
-        # below evaluate concurrently inside the single gated count job
-        # (independent stages of one job fill idle cores), and the union
-        # serialized that work through one longer shuffle chain — measured
-        # edges 8.2 s -> 11.0 s at 20k pages. Shuffle COUNT is not the
-        # bottleneck here; concurrent stage occupancy is.
-        #
-        # The family constructors run no Spark job of their own except the
-        # containment Bloom build (one JVM aggregation + bounded collect):
-        # both candidate_pairs calls are lazy, so all candidate work lands in
-        # the gated count job below.
-        minhash_pairs = lsh.candidate_pairs(buckets, self.cfg).select(
-            "id1", "id2", F.lit("minhash").alias("rule")
-        )
-        contain_cand = cont.containment_candidates(
+        fuzzy, n_cands = edge_families(
             reps,
             rep_texts,
+            buckets,
             self.cfg,
             n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
-        ).select(
-            F.col("small_id").alias("id1"),
-            F.col("big_id").alias("id2"),
-            F.lit("contain").alias("rule"),
         )
-        sim_pairs = lsh.simhash_band_pairs(reps, self.cfg).select(
-            "id1", "id2", F.lit("simhash").alias("rule")
-        )
-        # ONE gated candidate frame for all three fuzzy rules: a single
-        # persist+count job evaluates the minhash/containment/simhash
-        # candidate subtrees concurrently (independent stages of one job fill
-        # idle cores), where per-rule gates would chain three serial jobs.
-        cands = minhash_pairs.unionByName(contain_cand).unionByName(sim_pairs).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        n_cands = cands.count()
-        small = n_cands <= self.cfg.broadcast_pair_limit
         self.metrics["candidate_pairs"] = n_cands
-        self.metrics["verify_broadcast_gated"] = small
-        self._stage_persists.append(cands)
-        fz_pairs = cands.filter(F.col("rule") != "simhash")
-        sh_pairs = cands.filter(F.col("rule") == "simhash").select("id1", "id2")
-        if small:
-            fz_pairs = fz_pairs.hint("broadcast")
-        # both fuzzy rules verify in ONE kernel pass over ONE pair of text
-        # joins (operators/verify.py verify_tagged_pairs)
-        fuzzy = verify.verify_tagged_pairs(fz_pairs, rep_texts, self.cfg, pregated=True)
-        simhash = lsh.hamming_edges(sh_pairs, reps, self.cfg, gated=small).select(
-            "id1",
-            "id2",
-            (F.lit(1.0) - F.col("hamming") / F.lit(64.0)).alias("jaccard"),
-            F.lit("simhash").alias("rule"),
-        )
-        return verify.combine_edges(exact, fuzzy, simhash)
+        self.metrics["verify_broadcast_gated"] = n_cands <= self.cfg.broadcast_pair_limit
+        return verify.combine_edges(verify.exact_edges(signatures), fuzzy)
 
     def _components(self, edges: DataFrame, extract_df: DataFrame) -> DataFrame:
         assign = comp.connected_components(
@@ -348,14 +288,10 @@ class DedupPipeline:
             self._tune_scan_splits(stage)
             df, key = self._build_stage(stage, pages)
             info = self.store.write(stage, df, fp, key_col=key)
-            for cached in self._stage_persists:
-                cached.unpersist()
-            self._stage_persists.clear()
-            # operator-internal tracked persists (the containment sketch
-            # table) are scoped to the stage that created them
-            from .. import caching as _caching
-
-            _caching.release_all()
+            # tracked persists (rep_texts, the gated candidate frame, the
+            # containment sketch table) are scoped to the stage that
+            # created them
+            release_all()
             res.timings[stage] = time.monotonic() - t0
             res.rows[stage] = info.rows
         if prev_split is not None:

@@ -378,3 +378,68 @@ def test_duplicate_pairs_bounded_and_correct(spark):
         pipe.duplicate_pairs(max_cluster_size=1000)
     # an explicit higher cap still materializes the full combination set
     assert pipe.duplicate_pairs(max_cluster_size=3000).count() == 3000 * 2999 // 2
+
+
+def test_deep_compaction_edges_equal_pipeline_fuzzy_edges(spark, tiny_pages, pipeline_run):
+    """The batch pipeline and streaming deep compaction compose the fuzzy
+    rule families through one operator: a full deep pass over the stream
+    state of the same pages finds exactly the pipeline's non-exact edges."""
+    from infoscience_imports_spark import caching
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    pipe, cfg = pipeline_run
+    inc = IncrementalNearDedup(
+        spark, tempfile.mkdtemp(prefix="stream-deep-eq-"), cfg, n_state_buckets=8
+    )
+    inc.process_batch(pipeline_input(tiny_pages), 0)
+    try:
+        deep = inc._deep_edges()
+        got = {
+            (r[0], r[1])
+            for r in deep.select(F.least("id1", "id2"), F.greatest("id1", "id2")).collect()
+        }
+    finally:
+        caching.release_all()
+    snap = pipe.store.read("edges", pipe.fingerprint("edges"))
+    want = {
+        (r[0], r[1])
+        for r in snap.filter(F.col("rule") != "exact")
+        .select(F.least("id1", "id2"), F.greatest("id1", "id2"))
+        .collect()
+    }
+    assert want and got == want
+
+
+def test_pipeline_run_releases_every_tracked_persist(spark, monkeypatch):
+    """Every frame the pipeline persists goes through caching.persist_tracked
+    and is unpersisted by the end of run()."""
+    import sys
+
+    from pyspark.storagelevel import StorageLevel
+
+    from infoscience_imports_spark import caching
+    from infoscience_imports_spark.sources.synthetic import generate_web_pages
+
+    persisted = []
+    original = caching.persist_tracked
+
+    def recording(df, *args, **kwargs):
+        out = original(df, *args, **kwargs)
+        persisted.append(out)
+        return out
+
+    # modules bind the function at import (``from ..caching import ...``)
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "persist_tracked", None) is original:
+            monkeypatch.setattr(mod, "persist_tracked", recording)
+
+    pages = generate_web_pages(spark, 80, seed=5)
+    pipe = DedupPipeline(
+        spark,
+        CheckpointStore(spark, tempfile.mkdtemp(prefix="wh-persist-")),
+        DedupConfig(shuffle_partitions=8),
+    )
+    pipe.run(pipeline_input(pages))
+    # rep_texts, the containment sketch rows and the gated candidate frame
+    assert len(persisted) >= 3
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
