@@ -404,7 +404,11 @@ def q_dedup_simhash_title(spark, sf_dir):
     # cached: the signature frame feeds the banding probe job, the gated
     # candidate count AND both sides of hamming_edges — uncached, the Arrow
     # kernel re-ran once per consumer (measured ~1.2 s each at sf1.0)
-    sg = _cached(sigs.compute_signatures(docs, CFG, text_col="text_norm", id_col="doc_id"))
+    sg = _cached(
+        sigs.compute_signatures(
+            docs, CFG, text_col="text_norm", id_col="doc_id", include_shingles=False
+        )
+    )
     cand = lsh.simhash_candidate_pairs(sg, CFG)
     j = (
         cand.join(pf.select(F.col("doc_id").alias("id1"), F.col("ps").alias("ps1")), on="id1")
@@ -436,7 +440,9 @@ def q_containment_substring(spark, sf_dir):
             _t(spark, sf_dir, "documents").repartition(spark.sparkContext.defaultParallelism)
         )
     )
-    sg = sigs.compute_signatures(docs, cfg, text_col="text_norm", id_col="doc_id")
+    sg = sigs.compute_signatures(
+        docs, cfg, text_col="text_norm", id_col="doc_id", include_shingles=False
+    )
     cand = containment_candidates(
         sg.select("doc_id", "bottomk", "n_shingles"),
         docs.select("doc_id", "text_norm"),

@@ -40,6 +40,7 @@ def worker(cores: int, corpus: str) -> None:
     from infoscience_imports_spark.session import get_spark
     from infoscience_imports_spark.sources.catalog import CheckpointStore
     from infoscience_imports_spark.sources.synthetic import generate_web_pages, pipeline_input
+    from bench import _host_steal_ticks
 
     # The extract/signature kernels are CPU-dense (~2 MB/s/core), so scan
     # splits must be sized to a few seconds of kernel work or the run is
@@ -98,14 +99,6 @@ def worker(cores: int, corpus: str) -> None:
         ),
         flush=True,
     )
-
-
-def _host_steal_ticks() -> int:
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except Exception:
-        return 0
 
 
 def _cpu8_efficiency() -> float:

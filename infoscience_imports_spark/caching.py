@@ -11,9 +11,11 @@ through :func:`persist_tracked`; harnesses that run query after query call
 Contract: release only AFTER the query's action has executed. Re-executing a
 returned DataFrame after release recomputes (correct, just unaccelerated).
 Unpersist is non-blocking — freeing is bookkeeping, never on the critical
-path. The :class:`~..plans.pipeline` keeps its own per-stage persist list
-because its lifetimes span stages with explicit barriers; this registry is
-for fire-and-forget operator internals.
+path. This registry is the one persist-lifetime mechanism: operators, the
+batch pipeline and the streaming micro-batch and compaction all persist
+through it, and each unit of work ends with :func:`release_all` (the
+pipeline's ``run()``, a stream's ``process_batch`` and ``compact``, the
+entry harness between queries).
 """
 
 from __future__ import annotations

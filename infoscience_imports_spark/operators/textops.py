@@ -2,7 +2,7 @@
 
 All hot paths are pure Column expressions (whole-stage codegen) — language
 ID, quality scoring and token counting never leave the JVM. The winnowing
-fingerprint uses explode + window over JVM xxhash64 (no Python).
+fingerprint is one per-document Arrow kernel (no shuffle).
 
 These generalize the reference's scalar-function surface (SURVEY.md §2.8:
 clean_title/clean_value normalization kernels, fuzzy keyword predicates)
@@ -11,7 +11,7 @@ into the standard web-corpus curation set.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text_col
@@ -159,50 +159,39 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def portable_token_hash(tok: Column) -> Column:
-    """Engine-portable token hash: polynomial fold over ASCII codes, mod a
-    prime. Normalized tokens are [0-9a-z] only, so ``ascii``/``unicode``
-    agree across engines — this is what lets the winnowing output be
-    verified row-for-row by an independent SQL engine (the xxhash64 default
-    has no cross-engine twin)."""
-    codes = F.transform(F.split(tok, ""), lambda c: F.ascii(c).cast("long"))
-    return F.aggregate(
-        codes,
-        F.lit(7).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + c) % F.lit(1_000_003),
-    )
-
-
 def winnowing_fingerprints(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
     window: int = 4,
-    portable_hash: bool = True,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — public).
 
     k-gram rolling hashes, then the min hash of every sliding window of
     ``window`` consecutive k-grams is selected; distinct selected hashes are
-    the doc's fingerprints.
+    the doc's fingerprints. Tokens hash with the engine-portable polynomial
+    fold, so an independent SQL engine can verify the output row for row.
 
-    ``portable_hash=True`` (default, the oracle-checked polynomial hash)
-    runs as ONE Arrow ``mapInPandas`` kernel with per-row NumPy sliding
+    Runs as ONE Arrow ``mapInPandas`` kernel with per-row NumPy sliding
     windows: fingerprints are a strictly per-document quantity, so the
     previous posexplode of every token through a shuffle + two sorted
     rolling windows + an array aggregation (O(total tokens) exchanged, the
     whole corpus re-sorted twice) bought nothing but exchange and sort time
     — guide §2.4 "remove shuffles outright". Measured at sf1.0: 5.9 s /
     23 MB shuffle -> sub-second / zero shuffle, byte-identical output
-    (pinned by tests/test_parity_ops.py equivalence test and the DuckDB
-    oracle hash). ``id_col`` is emitted as long in this path.
-
-    ``portable_hash=False`` (xxhash64 values — no Python twin exists, so
-    the kernel cannot reproduce them) keeps the JVM window plan.
+    (pinned by tests/test_parity_ops.py, which keeps the window plan as the
+    reference, and the DuckDB oracle hash). ``id_col`` must be an integer
+    column; it is emitted as long.
     """
-    if not portable_hash:
-        return _winnowing_fingerprints_windowed(df, id_col, text_col, k, window, False)
+    from pyspark.sql.types import IntegralType
+
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"winnowing_fingerprints needs an integer id column; "
+            f"{id_col!r} is {id_type.simpleString()}"
+        )
 
     from collections.abc import Iterator
 
@@ -233,8 +222,8 @@ def winnowing_fingerprints(
         memo: dict[str, int] = {}
 
         def tok_hash(t: str) -> int:
-            # polynomial fold — the exact twin of portable_token_hash /
-            # the DuckDB list_reduce oracle (hash-pinned in CORRECTNESS)
+            # polynomial fold — the exact twin of the DuckDB list_reduce
+            # oracle (hash-pinned in CORRECTNESS)
             h = memo.get(t)
             if h is None:
                 h = 7
@@ -275,38 +264,6 @@ def winnowing_fingerprints(
             )
 
     return src.mapInPandas(kernel, schema=schema)
-
-
-def _winnowing_fingerprints_windowed(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    window: int = 4,
-    portable_hash: bool = True,
-) -> DataFrame:
-    """JVM window-function form of :func:`winnowing_fingerprints` — kept for
-    the xxhash64 variant (no Python hash twin) and as the equivalence
-    oracle for the Arrow kernel in tests."""
-    toks = df.select(F.col(id_col).alias("doc_id"), F.posexplode(tokens_col(F.col(text_col))).alias("pos", "tok"))
-    h_col = portable_token_hash(F.col("tok")) if portable_hash else F.xxhash64("tok")
-    hashed = toks.withColumn("h", h_col)
-    w_gram = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(0, k - 1)
-    )
-    grams = (
-        hashed.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
-        .withColumn("gram_h", F.pmod(F.sum(F.pmod(F.col("h"), F.lit(1 << 31))).over(w_gram), F.lit(1 << 31)))
-        .filter(F.col("pos") <= F.col("n") - k)
-    )
-    w_win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
-    selected = grams.withColumn("fp", F.min("gram_h").over(w_win))
-    return selected.groupBy("doc_id").agg(
-        F.array_sort(F.array_distinct(F.collect_list("fp"))).alias("fingerprints"),
-        F.size(F.array_distinct(F.collect_list("fp"))).alias("n_fingerprints"),
-    )
 
 
 def top_ngrams(docs: DataFrame, n: int = 5, k: int = 100, text_col: str = "text") -> DataFrame:

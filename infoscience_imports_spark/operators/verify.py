@@ -10,11 +10,12 @@ Reference parity:
     (``rapidfuzz partial_ratio >= 80``, ``data_pipeline/enricher.py:197``)
     made exact, in two forms: :func:`verify_tagged_pairs` recomputes
     shingle sets from the two normalized texts in one Arrow kernel and
-    verifies minhash AND containment candidates in the same pass (the batch
-    pipeline and deep compaction, via operators/edges.py); callers that
-    already hold shingle arrays in memory (the streaming micro-batch, the
-    entry MinHash queries) use :func:`jaccard_verify`, which computes the
-    Jaccard JVM-side with array_intersect — no Python, no UDF.
+    verifies minhash AND containment candidates in the same pass. The batch
+    pipeline and deep compaction (via operators/edges.py) and the streaming
+    micro-batch verify through it, so no stored state carries shingle
+    arrays. The entry MinHash queries, which compute their signatures with
+    shingle arrays in memory, use :func:`jaccard_verify`: the Jaccard
+    JVM-side with array_intersect — no Python, no UDF.
 """
 
 from __future__ import annotations
@@ -80,19 +81,14 @@ def jaccard_verify(
     signatures: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     rule: str = "minhash",
-    pregated: bool = False,
 ) -> DataFrame:
-    """(id1, id2) candidates -> verified edges with exact shingle Jaccard.
-
-    ``pregated=True``: the caller already persisted (and, if it wants, hinted)
-    the pair frame and owns its unpersist — long-running callers (streaming
-    micro-batches) must not leak one internal gate persist per batch."""
+    """(id1, id2) candidates -> verified edges with exact shingle Jaccard."""
     sig = signatures.select("doc_id", "shingles", "n_shingles")
     # size-gated broadcast of the narrow pair list (gate_broadcast_info):
     # small lists stream the wide shingle arrays through both joins
     # shuffle-free, large ones fall back to shuffle joins + AQE
     joined = (
-        (pairs if pregated else gate_broadcast_info(pairs, cfg.broadcast_pair_limit)[0])
+        gate_broadcast_info(pairs, cfg.broadcast_pair_limit)[0]
         .join(
             sig.select(
                 F.col("doc_id").alias("id1"),

@@ -31,6 +31,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import persist_tracked, release_all
 from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions.text import extract_text_col, normalize_text_col
 from ..operators import signatures as sigs
@@ -100,10 +101,10 @@ class IncrementalDedup:
     # -- batch kernel (also used by foreachBatch) ------------------------------
     def _exact_fresh(self, pages: DataFrame):
         """Signatures of the batch minus already-known digests, exact-deduped
-        within the batch. Returns (sg, fresh_unique); BOTH are persisted —
-        the caller must unpersist them after its writes."""
-        from pyspark.storagelevel import StorageLevel
-
+        within the batch, as an eager local checkpoint. The signature pass
+        underneath is a tracked persist: the caller ends the batch with
+        ``release_all()``. No shingle arrays are computed — the per-batch
+        verify recomputes them from ``text_norm``."""
         self._migrate_legacy_state()
         ext = pages.select(
             F.xxhash64("url").alias("doc_id"),
@@ -111,10 +112,10 @@ class IncrementalDedup:
         )
         # persisted: the touched-buckets collect + the writes downstream
         # would otherwise each recompute the full signature kernel pass
-        sg = (
-            sigs.compute_signatures(ext, self.cfg, keep_text=self._keep_text)
-            .withColumn("state_bucket", self._bucket_col())
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        sg = persist_tracked(
+            sigs.compute_signatures(
+                ext, self.cfg, include_shingles=False, keep_text=self._keep_text
+            ).withColumn("state_bucket", self._bucket_col())
         )
         has_state = os.path.isdir(self.sig_dir) and any(
             d.startswith("state_bucket=") for d in os.listdir(self.sig_dir)
@@ -151,10 +152,10 @@ class IncrementalDedup:
             # a micro-batch must be survivable.
             .localCheckpoint(eager=True)
         )
-        return sg, fresh_unique
+        return fresh_unique
 
     def process_batch(self, pages: DataFrame, batch_id: int) -> None:
-        sg, fresh_unique = self._exact_fresh(pages)
+        fresh_unique = self._exact_fresh(pages)
         try:
             # the known-digest check reads only `digest`
             fresh_unique.select("doc_id", "digest", "state_bucket").write.mode(
@@ -164,8 +165,7 @@ class IncrementalDedup:
                 "batch_id", F.lit(batch_id)
             ).write.mode("append").parquet(self.new_dir)
         finally:
-            fresh_unique.unpersist()
-            sg.unpersist()
+            release_all()
 
     # -- streaming driver -------------------------------------------------------
     def start(self, input_dir: str, schema, trigger_available_now: bool = True):
@@ -252,15 +252,22 @@ class IncrementalNearDedup(IncrementalDedup):
     batch's fresh signatures are banded (same ``lsh.band_buckets``), joined
     against the accumulated **band-bucket state** for new-vs-old candidates
     and against themselves (``lsh.candidate_pairs``, hot-bucket capped) for
-    new-vs-new, exact-Jaccard verified (``verify.jaccard_verify`` over
-    stored shingle sets), and clustered.
+    new-vs-new, exact-Jaccard verified by the batch pipeline's kernel
+    (``verify.verify_tagged_pairs``, minhash rule, shingle sets recomputed
+    from stored ``text_norm``), and clustered.
 
-    State layout — three hash-partitioned dirs so every per-batch read is
+    State layout — hash-partitioned dirs so every per-batch read is
     partition-pruned by a tiny driver list (same discipline as the digest
     state):
-      * ``buckets``   (band, bucket, doc_id)        by pmod(xxhash64(band,bucket))
-      * ``docsigs``   (doc_id, shingles, n_shingles) by pmod(xxhash64(doc_id))
-      * ``clusters``  (doc_id, cluster_id)           by pmod(xxhash64(doc_id))
+      * ``buckets``  (band, bucket, old_id)  by bpart = pmod(xxhash64(band, bucket))
+      * ``docsigs``  (doc_id, n_shingles, bands, simhash64, bottomk, text_norm)
+                                             by dpart = pmod(xxhash64(doc_id))
+      * ``clusters`` (doc_id, cluster_id)    by dpart
+      * ``edges``    (id1, id2, batch_id, epoch), unpartitioned: the
+        verified-edge history that :meth:`compact` runs CC over
+    Doc state holds no shingle arrays; files written when it did still
+    read (the extra column is ignored). Doc state written before
+    ``text_norm`` was stored cannot be verified against — re-ingest it.
 
     Boundedness: bucket state inserts stop once a (band, bucket) holds
     ``cfg.bucket_cap`` members — later docs in that bucket still link
@@ -268,7 +275,7 @@ class IncrementalNearDedup(IncrementalDedup):
     in-batch star pairing) — so per-batch new-vs-old candidates are
     O(batch x cap) at any stream age. Doc-keyed state is first-write-wins:
     a re-crawled URL (same doc_id, new digest) keeps its original cluster
-    row and shingle row; the digest state still admits the new content.
+    row and doc-state row; the digest state still admits the new content.
 
     Cluster semantics (the reference's "dedup against the repository" second
     pass, ``deduplicator.py:146-162``): an admitted doc's cluster_id is
@@ -316,7 +323,7 @@ class IncrementalNearDedup(IncrementalDedup):
         # the bucket count is baked into every stored dpart value; reopening
         # with a different one would silently corrupt pruned reads and the
         # partition-scoped rewrite (round-5 ADVICE) — validate against the
-        # stamp the first compaction wrote
+        # stamp the first state write (process_batch or compact) left
         stamped = self._read_meta().get("n_state_buckets")
         if stamped is not None and int(stamped) != int(n_state_buckets):
             raise ValueError(
@@ -339,14 +346,17 @@ class IncrementalNearDedup(IncrementalDedup):
         return self.spark.read.parquet(path).filter(F.col(part_col).isin(touched))
 
     def process_batch(self, pages: DataFrame, batch_id: int) -> None:
-        from pyspark.storagelevel import StorageLevel
-
         from ..operators import lsh
         from ..operators import verify as vfy
         from ..operators.components import connected_components
 
-        sg, fresh = self._exact_fresh(pages)
-        persisted: list[DataFrame] = []
+        def verified(pairs: DataFrame, texts: DataFrame) -> DataFrame:
+            # the batch pipeline's verify kernel, minhash rule: shingle sets
+            # are recomputed from text_norm, so doc state stores no arrays
+            tagged = pairs.select("id1", "id2", F.lit("minhash").alias("rule"))
+            return vfy.verify_tagged_pairs(tagged, texts, self.cfg, pregated=True)
+
+        fresh = self._exact_fresh(pages)
         try:
             # ---- candidate generation (NO state writes yet: every frame
             # whose plan reads a state dir is eagerly materialized before the
@@ -363,34 +373,24 @@ class IncrementalNearDedup(IncrementalDedup):
                 # persisted: feeds the docsig-pruning collect, the verify
                 # join and the cluster link — uncached it would re-run the
                 # state join three times per batch
-                new_old = (
+                new_old = persist_tracked(
                     fb.join(old_buckets, on=["band", "bucket"])
                     .filter(F.col("doc_id") != F.col("old_id"))
                     .select(
                         F.col("doc_id").alias("id1"), F.col("old_id").alias("id2")
                     )
                     .distinct()
-                    .persist(StorageLevel.MEMORY_AND_DISK)
                 )
-                persisted.append(new_old)
 
-            # ---- verify: shingles of new docs (in-batch) + old docs (pruned) ----
-            # doc state keeps bands/simhash64/bottomk/text_norm beyond the
-            # verify columns: deep compaction re-runs ALL THREE fuzzy rule
-            # families (minhash/simhash/containment) over state, which must
-            # therefore be self-contained
+            # ---- verify: texts of new docs (in-batch) + old docs (pruned) ----
+            # doc state keeps bands/simhash64/bottomk/text_norm: deep
+            # compaction re-runs ALL THREE fuzzy rule families
+            # (minhash/simhash/containment) over state, which must therefore
+            # be self-contained; the per-batch verify reads only text_norm
             new_sigs = fresh.select(
-                "doc_id",
-                "shingles",
-                "n_shingles",
-                "bands",
-                "simhash64",
-                "bottomk",
-                "text_norm",
+                "doc_id", "n_shingles", "bands", "simhash64", "bottomk", "text_norm"
             )
-            # verify itself only consumes the narrow columns; the wide view
-            # exists for the docsig state write (sigs_out) below
-            new_sigs_v = new_sigs.select("doc_id", "shingles", "n_shingles")
+            new_texts = new_sigs.select("doc_id", "text_norm")
             edges_no = None
             if new_old is not None:
                 involved = (
@@ -402,34 +402,27 @@ class IncrementalNearDedup(IncrementalDedup):
                 # deterministic overlap resolution (re-crawled URLs appear in
                 # both): the batch's row wins — an anti-join beats
                 # dropDuplicates, whose surviving row is partition-order luck
-                all_sigs = (
-                    new_sigs_v
+                all_texts = (
+                    new_texts
                     if old_sigs is None
-                    else new_sigs_v.unionByName(
-                        old_sigs.select("doc_id", "shingles", "n_shingles").join(
-                            new_sigs_v.select("doc_id"), on="doc_id", how="left_anti"
+                    else new_texts.unionByName(
+                        old_sigs.select("doc_id", "text_norm").join(
+                            new_texts.select("doc_id"), on="doc_id", how="left_anti"
                         )
                     )
                 )
                 # (new_id, old_id) verified links to admitted docs; persisted
-                # (pregated) — it is consumed by the cluster-state pruning
-                # collect AND the link join
-                edges_no = (
-                    vfy.jaccard_verify(new_old, all_sigs, self.cfg, pregated=True)
-                    .select(F.col("id1").alias("doc_id"), F.col("id2").alias("old_id"))
-                    .persist(StorageLevel.MEMORY_AND_DISK)
+                # — it is consumed by the cluster-state pruning collect AND
+                # the link join
+                edges_no = persist_tracked(
+                    verified(new_old, all_texts).select(
+                        F.col("id1").alias("doc_id"), F.col("id2").alias("old_id")
+                    )
                 )
-                persisted.append(edges_no)
-            nn_pairs = new_new.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(nn_pairs)
+            nn_pairs = persist_tracked(new_new)
             # persisted: feeds batch CC below AND the edge-state append —
             # uncached the verify kernel would run twice
-            edges_nn = (
-                vfy.jaccard_verify(nn_pairs, new_sigs_v, self.cfg, pregated=True)
-                .select("id1", "id2")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            persisted.append(edges_nn)
+            edges_nn = persist_tracked(verified(nn_pairs, new_texts).select("id1", "id2"))
 
             # ---- cluster: stable ids for admitted docs ----
             # 1) group the batch's new docs among themselves (component min)
@@ -496,7 +489,7 @@ class IncrementalNearDedup(IncrementalDedup):
                 )
             # re-crawled URL (same doc_id, new digest): the URL-keyed doc
             # state is first-write-wins — the original cluster assignment and
-            # shingle row stay authoritative (content-addressed digest state
+            # doc-state row stay authoritative (content-addressed digest state
             # still admits the new content for exact-dup purposes)
             fresh_dparts = fresh.select("doc_id").withColumn("dpart", self._part("doc_id"))
             known_docs = self._read_pruned(self.cluster_dir, fresh_dparts, "dpart")
@@ -538,6 +531,10 @@ class IncrementalNearDedup(IncrementalDedup):
             )
 
             # ---- writes (all frames below are lineage-cut or state-free) ----
+            # stamp the bucket count before the first partition value lands,
+            # so a reopen with another count is rejected even before any
+            # compaction (see __init__)
+            self._update_meta()
             edges_out.write.mode("append").parquet(self.edge_dir)
             # digest state: the known-digest check reads only `digest`;
             # signatures and text live once, in docsig state
@@ -551,16 +548,10 @@ class IncrementalNearDedup(IncrementalDedup):
                 "batch_id", F.lit(batch_id)
             ).write.mode("append").parquet(self.new_dir)
         finally:
-            for df in persisted:
-                df.unpersist()
-            fresh.unpersist()
-            sg.unpersist()
-            # operator-internal tracked persists (containment's posting
-            # tables, gate persists) must not accumulate across
-            # micro-batches — same drain the compact() path does
-            from .. import caching
-
-            caching.release_all()
+            # every persist of the batch (the signature pass, candidate and
+            # verified-edge frames) is tracked; none may outlive it — same
+            # drain the compact() path does
+            release_all()
         self._maybe_auto_compact(batch_id)
 
     def _maybe_auto_compact(self, batch_id: int) -> None:
@@ -636,6 +627,8 @@ class IncrementalNearDedup(IncrementalDedup):
         # with a different bucket count is rejected at __init__ (see there)
         m.setdefault("n_state_buckets", int(self.n_state_buckets))
         m.update(kv)
+        # the first micro-batch stamps before any state dir exists
+        os.makedirs(self.state_dir, exist_ok=True)
         tmp = self._compact_meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(m, f)
@@ -767,18 +760,15 @@ class IncrementalNearDedup(IncrementalDedup):
         of a full CC). Returns metrics (docs, edges, clusters before/after,
         merged count, cc_mode, touched_parts, stage timings).
         """
-        from .. import caching
-
         try:
             return self._compact_inner(deep, full_deep, count_clusters, full_cc)
         finally:
-            # Operator-internal persists (candidate-gate broadcasts, bottom-k
-            # posting tables) registered via caching.persist_tracked are
-            # otherwise drained only by the bench harness's release_caches();
+            # Every persist of the pass (the deep doc-state scan, candidate
+            # gates, bottom-k posting tables, the relabel frame) is tracked;
             # a long-lived process running repeated deep compactions would
-            # accumulate them (round-5 ADVICE). Release is non-blocking and
-            # runs after every action here has executed.
-            caching.release_all()
+            # otherwise accumulate them (round-5 ADVICE). Release is
+            # non-blocking and runs after every action here has executed.
+            release_all()
 
     def _compact_inner(
         self,
@@ -954,8 +944,6 @@ class IncrementalNearDedup(IncrementalDedup):
         assign = connected_components(
             new_edges.unionByName(prior_links), self.cfg
         ).localCheckpoint(eager=True)  # reused by counts + two rewrite plans
-        from pyspark.storagelevel import StorageLevel
-
         # Docs absent from the CC assignment fall back to their EXISTING
         # cluster_id (for seeded prior members that is never reached; this
         # covers true singletons, whose cluster_id == doc_id).
@@ -968,7 +956,7 @@ class IncrementalNearDedup(IncrementalDedup):
         # __init__ rejects the misconfiguration outright; this keeps the
         # rewrite self-consistent even for legacy dirs predating the stamp.
         _relabel_cols = ["doc_id"] + (["dpart"] if has_dpart else [])
-        relabeled = (
+        relabeled = persist_tracked(
             scope_members.select(*_relabel_cols, F.col("cluster_id").alias("_prior"))
             .join(assign, on="doc_id", how="left")
             .select(
@@ -976,90 +964,89 @@ class IncrementalNearDedup(IncrementalDedup):
                 F.coalesce("cluster_id", "_prior").alias("cluster_id"),
                 F.col("_prior").alias("prior_cluster"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        try:
-            n_scope_before = relabeled.select("prior_cluster").distinct().count()
-            n_scope_after = relabeled.select("cluster_id").distinct().count()
-            merged = n_scope_before - n_scope_after
-            if not scoped:
-                n_before = n_scope_before
-            else:
-                n_before = (
-                    clusters.select("cluster_id").distinct().count()
-                    if count_clusters
-                    else None
-                )
-            # The rewrite may be skipped only when NO label moved. merged == 0
-            # alone does not prove that (round-5 ADVICE): the micro-batch
-            # path assigns a new doc the MIN EXISTING cluster_id of its
-            # partners, and doc_ids are hash values, so a later-admitted doc
-            # with a lower id can cause the scoped CC to relabel a single
-            # prior cluster to a new lower minimum with merged == 0 — the
-            # distinct count is unchanged but the component-min convention
-            # drifts. Probe the persisted relabel frame directly (one cheap
-            # limit-1 job); a pure relabel falls through to the scoped
-            # rewrite, which restores the documented invariant.
-            if merged == 0 and not relabeled.filter(
+        n_scope_before = relabeled.select("prior_cluster").distinct().count()
+        n_scope_after = relabeled.select("cluster_id").distinct().count()
+        merged = n_scope_before - n_scope_after
+        if not scoped:
+            n_before = n_scope_before
+        else:
+            n_before = (
+                clusters.select("cluster_id").distinct().count()
+                if count_clusters
+                else None
+            )
+        # The rewrite may be skipped only when NO label moved. merged == 0
+        # alone does not prove that (round-5 ADVICE): the micro-batch
+        # path assigns a new doc the MIN EXISTING cluster_id of its
+        # partners, and doc_ids are hash values, so a later-admitted doc
+        # with a lower id can cause the scoped CC to relabel a single
+        # prior cluster to a new lower minimum with merged == 0 — the
+        # distinct count is unchanged but the component-min convention
+        # drifts. Probe the persisted relabel frame directly (one cheap
+        # limit-1 job); a pure relabel falls through to the scoped
+        # rewrite, which restores the documented invariant.
+        if merged == 0 and not relabeled.filter(
+            F.col("cluster_id") != F.col("prior_cluster")
+        ).limit(1).count():
+            self._advance_watermarks(deep, next_wm, epoch_hi)
+            return {
+                "docs": n_docs,
+                "edges": n_edges,
+                "clusters_before": n_before,
+                "clusters_after": n_before,
+                "merged": 0,
+                "deep_scope": deep_scope,
+                "deep_gen_s": round(deep_gen_s, 3),
+                "scope_docs": scope_n,
+                "cc_mode": "scoped" if scoped else "full",
+                "cc_rewrite_s": round(time.monotonic() - t_cc, 3),
+            }
+        tmp = self.cluster_dir + ".compact-tmp"
+        touched_n = None
+        if scoped and has_dpart:
+            # rewrite ONLY the state partitions holding a changed doc;
+            # untouched partition dirs are hardlinked into the swap tmp
+            # (same filesystem by construction). On an object store this
+            # whole tmp+swap is an Iceberg overwrite of the touched
+            # partitions — the passthrough is free there.
+            changed = relabeled.filter(
                 F.col("cluster_id") != F.col("prior_cluster")
-            ).limit(1).count():
-                self._advance_watermarks(deep, next_wm, epoch_hi)
-                return {
-                    "docs": n_docs,
-                    "edges": n_edges,
-                    "clusters_before": n_before,
-                    "clusters_after": n_before,
-                    "merged": 0,
-                    "deep_scope": deep_scope,
-                    "deep_gen_s": round(deep_gen_s, 3),
-                    "scope_docs": scope_n,
-                    "cc_mode": "scoped" if scoped else "full",
-                    "cc_rewrite_s": round(time.monotonic() - t_cc, 3),
-                }
-            tmp = self.cluster_dir + ".compact-tmp"
-            touched_n = None
-            if scoped and has_dpart:
-                # rewrite ONLY the state partitions holding a changed doc;
-                # untouched partition dirs are hardlinked into the swap tmp
-                # (same filesystem by construction). On an object store this
-                # whole tmp+swap is an Iceberg overwrite of the touched
-                # partitions — the passthrough is free there.
-                changed = relabeled.filter(
-                    F.col("cluster_id") != F.col("prior_cluster")
+            )
+            # STORED dpart (carried through relabeled), not recomputed:
+            # the partitions to rewrite are wherever the changed docs
+            # actually live on disk
+            touched = sorted(
+                r[0] for r in changed.select("dpart").distinct().collect()
+            )
+            touched_n = len(touched)
+            rows = (
+                clusters.filter(F.col("dpart").isin(touched))
+                .select("doc_id", F.col("cluster_id").alias("_prior"), "dpart")
+                .join(assign, on="doc_id", how="left")
+                .select(
+                    "doc_id",
+                    F.coalesce("cluster_id", "_prior").alias("cluster_id"),
+                    "dpart",
                 )
-                # STORED dpart (carried through relabeled), not recomputed:
-                # the partitions to rewrite are wherever the changed docs
-                # actually live on disk
-                touched = sorted(
-                    r[0] for r in changed.select("dpart").distinct().collect()
+            )
+            rows.write.mode("overwrite").partitionBy("dpart").parquet(tmp)
+            self._link_untouched_parts(
+                self.cluster_dir, tmp, {f"dpart={t}" for t in touched}
+            )
+        else:
+            rewritten = (
+                clusters.select("doc_id", F.col("cluster_id").alias("_prior"))
+                .join(assign, on="doc_id", how="left")
+                .select(
+                    "doc_id", F.coalesce("cluster_id", "_prior").alias("cluster_id")
                 )
-                touched_n = len(touched)
-                rows = (
-                    clusters.filter(F.col("dpart").isin(touched))
-                    .select("doc_id", F.col("cluster_id").alias("_prior"), "dpart")
-                    .join(assign, on="doc_id", how="left")
-                    .select(
-                        "doc_id",
-                        F.coalesce("cluster_id", "_prior").alias("cluster_id"),
-                        "dpart",
-                    )
-                )
-                rows.write.mode("overwrite").partitionBy("dpart").parquet(tmp)
-                self._link_untouched_parts(
-                    self.cluster_dir, tmp, {f"dpart={t}" for t in touched}
-                )
-            else:
-                rewritten = (
-                    clusters.select("doc_id", F.col("cluster_id").alias("_prior"))
-                    .join(assign, on="doc_id", how="left")
-                    .select(
-                        "doc_id", F.coalesce("cluster_id", "_prior").alias("cluster_id")
-                    )
-                    .withColumn("dpart", self._part("doc_id"))
-                )
-                rewritten.write.mode("overwrite").partitionBy("dpart").parquet(tmp)
-        finally:
-            relabeled.unpersist()
+                .withColumn("dpart", self._part("doc_id"))
+            )
+            rewritten.write.mode("overwrite").partitionBy("dpart").parquet(tmp)
+        # the relabel frame reads cluster_dir: free it before the swap so
+        # refreshByPath below has no cached plan on the path to re-register
+        release_all()
         old = self.cluster_dir + ".pre-compact"
         os.rename(self.cluster_dir, old)
         os.rename(tmp, self.cluster_dir)
@@ -1128,18 +1115,21 @@ class IncrementalNearDedup(IncrementalDedup):
     def _deep_edges(self, scope_docs: DataFrame | None = None):
         """The batch pipeline's fuzzy edge families, re-run over doc state.
 
-        Doc state is text-self-contained (doc_id, shingles, n_shingles,
-        bands, simhash64, bottomk, text_norm), so candidate generation and
-        verify need NO access to the original pages: the state is handed to
+        Doc state is text-self-contained (doc_id, n_shingles, bands,
+        simhash64, bottomk, text_norm), so candidate generation and verify
+        need NO access to the original pages: the state is handed to
         :func:`~..operators.edges.edge_families` — the operator the
         pipeline's edges stage calls, with its union order, single gated
         candidate count, thresholds and verify kernels (reference
         semantics: ``deduplicator.py:117-139`` cascade over a full
-        re-harvest). Column pruning keeps each family's state scan narrow.
-        Returns a lineage-cut (id1, id2) frame, or ``None`` with no state.
-        Raises on state written by a pre-deep version (no text/bands
-        columns): deep compaction cannot be retrofitted onto lossy state —
-        re-ingest or run the batch pipeline over the raw pages instead.
+        re-harvest). Only those columns are scanned and cached, so state
+        files that still carry the old ``shingles`` arrays cost nothing
+        extra. Returns a lineage-cut (id1, id2) frame, or ``None`` with no
+        state. The state scans are tracked persists, freed by
+        :meth:`compact`'s ``release_all()``. Raises on state written by a
+        pre-deep version (no text/bands columns): deep compaction cannot be
+        retrofitted onto lossy state — re-ingest or run the batch pipeline
+        over the raw pages instead.
 
         ``scope_docs`` (incremental mode): a frame of doc_ids admitted since
         the last deep pass, passed to ``edge_families`` as its ``scope``:
@@ -1149,16 +1139,14 @@ class IncrementalNearDedup(IncrementalDedup):
         ``None`` when no scope doc has a doc-state row (nothing new to
         link).
         """
-        from pyspark.storagelevel import StorageLevel
-
         from ..operators import lsh
         from ..operators.edges import edge_families
 
         if not os.path.isdir(self.docsig_dir):
             return None
         state = self.spark.read.parquet(self.docsig_dir)
-        needed = {"doc_id", "n_shingles", "bands", "simhash64", "bottomk", "text_norm"}
-        missing = needed - set(state.columns)
+        needed = ["doc_id", "n_shingles", "bands", "simhash64", "bottomk", "text_norm"]
+        missing = set(needed) - set(state.columns)
         if missing:
             raise ValueError(
                 "deep compaction needs text-self-contained doc state; "
@@ -1178,32 +1166,24 @@ class IncrementalNearDedup(IncrementalDedup):
                 "(those docs would silently skip every rule family); "
                 "re-ingest, or run the batch pipeline over the raw pages"
             )
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-        new_state = None
+        state = persist_tracked(state.select(*needed))
         scope = None
-        try:
-            if scope_docs is not None:
-                scope = scope_docs.select("doc_id")
-                # the same plan edge_families builds for the scope's doc
-                # rows, so its key derivation reads this cache
-                new_state = state.join(scope, on="doc_id", how="left_semi").persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-                if not new_state.limit(1).count():
-                    return None
-            edges, _n = edge_families(
-                state,
-                state.select("doc_id", "text_norm"),
-                lsh.band_buckets(state, self.cfg),
-                self.cfg,
-                scope=scope,
-            )
-            # materialize before unpersisting the state scan the plan hangs on
-            return edges.select("id1", "id2").localCheckpoint(eager=True)
-        finally:
-            if new_state is not None:
-                new_state.unpersist()
-            state.unpersist()
+        if scope_docs is not None:
+            scope = scope_docs.select("doc_id")
+            # the same plan edge_families builds for the scope's doc rows,
+            # so its key derivation reads this cache
+            new_state = persist_tracked(state.join(scope, on="doc_id", how="left_semi"))
+            if not new_state.limit(1).count():
+                return None
+        edges, _n = edge_families(
+            state,
+            state.select("doc_id", "text_norm"),
+            lsh.band_buckets(state, self.cfg),
+            self.cfg,
+            scope=scope,
+        )
+        # materialize while the state scan the plan hangs on is cached
+        return edges.select("id1", "id2").localCheckpoint(eager=True)
 
 
 def watermark_dedup_stream(pages_stream: DataFrame, delay: str = "10 minutes") -> DataFrame:

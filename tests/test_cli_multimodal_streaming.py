@@ -203,6 +203,59 @@ def test_incremental_lsh_links_neardup_to_earlier_cluster(spark):
     assert cl[c] == c  # unrelated new doc stays a singleton
     # all four digests were admitted as unique (the near-dup is NOT exact)
     assert spark.read.parquet(inc.new_dir).count() == 4
+    # verify recomputes shingle sets from text_norm: none are stored
+    assert "shingles" not in spark.read.parquet(inc.docsig_dir).columns
+    shutil.rmtree(state)
+
+
+def test_incremental_links_against_doc_state_with_stored_shingles(spark):
+    """Doc state written when it still stored a ``shingles`` array per doc
+    stays usable: a near-dup in the next batch links to the stored doc
+    (verified from its stored text_norm) and deep compaction still runs."""
+    import datetime
+
+    from infoscience_imports_spark.operators import signatures as sigs
+    from infoscience_imports_spark.sources.synthetic import render_html
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    state = tempfile.mkdtemp(prefix="stream-old-docsigs-")
+    cfg = DedupConfig(shuffle_partitions=8)
+    inc = IncrementalNearDedup(spark, state, cfg, n_state_buckets=8)
+    words = [f"tok{i:03d}" for i in range(200)]
+    ts = datetime.datetime(2026, 1, 1)
+
+    def page(url, text):
+        return Row(url=url, warc_ts=ts, html=bytearray(render_html(text, "t")), lang="en")
+
+    inc.process_batch(spark.createDataFrame([page("https://a.test/1", " ".join(words))]), 0)
+    # rewrite batch 0's doc state in the older wide layout: every row
+    # carries its shingle array next to text_norm
+    cur = spark.read.parquet(inc.docsig_dir)
+    wide = cur.join(
+        sigs.compute_signatures(cur.select("doc_id", "text_norm"), cfg).select(
+            "doc_id", "shingles"
+        ),
+        on="doc_id",
+    )
+    tmp = inc.docsig_dir + ".wide"
+    wide.write.partitionBy("dpart").parquet(tmp)
+    shutil.rmtree(inc.docsig_dir)
+    os.rename(tmp, inc.docsig_dir)
+    assert "shingles" in spark.read.parquet(inc.docsig_dir).columns
+
+    near = " ".join(words[:-2] + ["changed", "ending"])
+    inc.process_batch(spark.createDataFrame([page("https://a-mirror.test/1", near)]), 1)
+    ids = dict(
+        spark.createDataFrame(
+            [("https://a.test/1",), ("https://a-mirror.test/1",)], "url string"
+        ).select("url", F.xxhash64("url")).collect()
+    )
+    cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
+    a, mirror = ids["https://a.test/1"], ids["https://a-mirror.test/1"]
+    assert cl[mirror] == cl[a] == a
+    inc.compact(deep=True)
+    cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
+    assert cl[mirror] == cl[a]
     shutil.rmtree(state)
 
 
@@ -673,9 +726,13 @@ def test_deep_compact_rejects_partially_migrated_state(spark):
         ),
         0,
     )
-    # sneak a pre-deep (narrow) file into the same state dir
+    # sneak a pre-deep (narrow) file into the same state dir: that layout
+    # stored a shingle array and no text_norm/bands
     spark.read.parquet(inc.docsig_dir).select(
-        "doc_id", "shingles", "n_shingles", "dpart"
+        "doc_id",
+        F.array(F.lit(0).cast("long")).alias("shingles"),
+        F.lit(1).alias("n_shingles"),
+        "dpart",
     ).limit(1).withColumn("doc_id", F.col("doc_id") + 1).write.mode("append").partitionBy(
         "dpart"
     ).parquet(inc.docsig_dir)
@@ -1064,6 +1121,25 @@ def test_reopen_with_different_state_buckets_rejected(spark):
     )
     inc.compact()  # stamps n_state_buckets into _compact_meta.json
     # same count reopens fine
+    IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8)
+    with pytest.raises(ValueError, match="n_state_buckets"):
+        IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=16)
+    shutil.rmtree(state)
+
+    # a dir that has only ingested micro-batches (dpart values already on
+    # disk, never compacted) is stamped too; the first batch creates it
+    import datetime
+
+    from infoscience_imports_spark.sources.synthetic import render_html
+
+    state = os.path.join(tempfile.mkdtemp(prefix="batch-buckets-"), "state")
+    inc = IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8)
+    text = " ".join(f"tok{i:03d}" for i in range(60))
+    html = bytearray(render_html(text, "t"))
+    ts = datetime.datetime(2026, 1, 1)
+    inc.process_batch(
+        spark.createDataFrame([Row(url="https://s.test/", warc_ts=ts, html=html, lang="en")]), 0
+    )
     IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8)
     with pytest.raises(ValueError, match="n_state_buckets"):
         IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=16)

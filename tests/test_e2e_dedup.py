@@ -410,15 +410,58 @@ def test_deep_compaction_edges_equal_pipeline_fuzzy_edges(spark, tiny_pages, pip
     assert want and got == want
 
 
+def test_text_verify_minhash_rows_equal_array_verify(spark, tiny_pages):
+    """The text verify kernel's minhash rows are byte-identical to the
+    array-based JVM verify on the same candidates: same (id1, id2) and the
+    same jaccard double, empty-text docs included (they never link)."""
+    from infoscience_imports_spark import caching
+    from infoscience_imports_spark.functions.text import extract_text_col, normalize_text_col
+    from infoscience_imports_spark.operators import lsh, verify
+    from infoscience_imports_spark.operators import signatures as sigs
+
+    cfg = DedupConfig(shuffle_partitions=8)
+    pages = pipeline_input(tiny_pages).select(
+        F.xxhash64("url").alias("doc_id"),
+        normalize_text_col(extract_text_col(F.col("html"))).alias("text_norm"),
+    )
+    empty = spark.createDataFrame([(-1, ""), (-2, "")], "doc_id long, text_norm string")
+    texts = pages.unionByName(empty).cache()
+    sg = sigs.compute_signatures(texts, cfg).cache()
+    ids = [r[0] for r in pages.select("doc_id").orderBy("doc_id").limit(12).collect()]
+    extra = [(a, b) for a in ids for b in ids if a < b]
+    extra += [(-2, -1), (-1, ids[0]), (ids[1], -2)]
+    pairs = (
+        lsh.candidate_pairs(lsh.band_buckets(sg, cfg), cfg)
+        .unionByName(spark.createDataFrame(extra, "id1 long, id2 long"))
+        .distinct()
+        .cache()
+    )
+    want = {
+        (r["id1"], r["id2"], r["jaccard"])
+        for r in verify.jaccard_verify(pairs, sg, cfg).collect()
+    }
+    tagged = pairs.withColumn("rule", F.lit("minhash"))
+    rows = verify.verify_tagged_pairs(tagged, texts, cfg).collect()
+    got = {(r["id1"], r["id2"], r["jaccard"]) for r in rows}
+    assert {r["rule"] for r in rows} == {"minhash"}
+    assert want and got == want
+    assert len(want) < pairs.count()  # some candidates were rejected
+    for df in (texts, sg, pairs):
+        df.unpersist()
+    caching.release_all()  # the two verify gates' tracked pair persists
+
+
 def test_pipeline_run_releases_every_tracked_persist(spark, monkeypatch):
-    """Every frame the pipeline persists goes through caching.persist_tracked
-    and is unpersisted by the end of run()."""
+    """Every frame the pipeline and the streaming dedup persist goes through
+    caching.persist_tracked and is unpersisted by the end of run(),
+    process_batch() and compact()."""
     import sys
 
     from pyspark.storagelevel import StorageLevel
 
     from infoscience_imports_spark import caching
     from infoscience_imports_spark.sources.synthetic import generate_web_pages
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
 
     persisted = []
     original = caching.persist_tracked
@@ -442,4 +485,23 @@ def test_pipeline_run_releases_every_tracked_persist(spark, monkeypatch):
     pipe.run(pipeline_input(pages))
     # rep_texts, the containment sketch rows and the gated candidate frame
     assert len(persisted) >= 3
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+    # streaming: two micro-batches (the second also verifies new-vs-old)
+    # and a deep compaction
+    persisted.clear()
+    inc = IncrementalNearDedup(
+        spark, tempfile.mkdtemp(prefix="stream-persist-"),
+        DedupConfig(shuffle_partitions=8), n_state_buckets=8,
+    )
+    split = pipeline_input(pages).withColumn("_b", F.pmod(F.xxhash64("url"), F.lit(2)))
+    inc.process_batch(split.filter("_b = 0").drop("_b"), 0)
+    # the signature pass, the new-new pairs and their verified edges
+    assert len(persisted) >= 3
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    inc.process_batch(split.filter("_b = 1").drop("_b"), 1)
+    n_batches = len(persisted)
+    inc.compact(deep=True)
+    # the deep doc-state scan, the gated candidates and the relabel frame
+    assert len(persisted) >= n_batches + 3
     assert all(df.storageLevel == StorageLevel.NONE for df in persisted)

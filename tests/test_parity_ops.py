@@ -2,6 +2,7 @@
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -194,15 +195,46 @@ def test_top_ngrams_df_semantics_and_boundary_tiebreak(spark):
     assert rows == [("a a", 1), ("b b", 1)], rows
 
 
+def _winnowing_fingerprints_windowed(df, k: int = 5, window: int = 4):
+    """JVM window-function form of ``winnowing_fingerprints``: posexplode
+    every token, hash it with the portable polynomial fold, sum k-gram
+    windows and take the min over ``window`` consecutive grams. The
+    reference the Arrow kernel must equal row for row."""
+    from pyspark.sql import Window
+
+    from infoscience_imports_spark.operators.textops import tokens_col
+
+    codes = F.transform(F.split(F.col("tok"), ""), lambda c: F.ascii(c).cast("long"))
+    h = F.aggregate(
+        codes,
+        F.lit(7).cast("long"),
+        lambda acc, c: (acc * F.lit(31) + c) % F.lit(1_000_003),
+    )
+    toks = df.select("doc_id", F.posexplode(tokens_col(F.col("text"))).alias("pos", "tok"))
+    w_gram = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, k - 1)
+    grams = (
+        toks.withColumn("h", h)
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
+        .withColumn(
+            "gram_h",
+            F.pmod(F.sum(F.pmod(F.col("h"), F.lit(1 << 31))).over(w_gram), F.lit(1 << 31)),
+        )
+        .filter(F.col("pos") <= F.col("n") - k)
+    )
+    w_win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
+    selected = grams.withColumn("fp", F.min("gram_h").over(w_win))
+    return selected.groupBy("doc_id").agg(
+        F.array_sort(F.array_distinct(F.collect_list("fp"))).alias("fingerprints"),
+        F.size(F.array_distinct(F.collect_list("fp"))).alias("n_fingerprints"),
+    )
+
+
 def test_winnowing_kernel_equals_windowed_form(spark):
     """The Arrow winnowing kernel (round-6: per-row NumPy sliding windows,
     zero shuffle) must be row-identical to the JVM window-function form it
     replaced — including <k-token docs (absent), exactly-k docs (one gram),
     repeated tokens, empty and NULL text."""
-    from infoscience_imports_spark.operators.textops import (
-        _winnowing_fingerprints_windowed,
-        winnowing_fingerprints,
-    )
+    from infoscience_imports_spark.operators.textops import winnowing_fingerprints
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -224,3 +256,16 @@ def test_winnowing_kernel_equals_windowed_form(spark):
         for r in _winnowing_fingerprints_windowed(docs).collect()
     }
     assert got == want
+
+
+def test_winnowing_rejects_non_integer_id(spark):
+    """A string id column fails up front with a TypeError, not inside the
+    Arrow kernel's int() coercion at action time."""
+    from infoscience_imports_spark.operators.textops import winnowing_fingerprints
+
+    docs = spark.createDataFrame([("a", "one two three four five six")], "doc_id string, text string")
+    with pytest.raises(TypeError, match="integer id column"):
+        winnowing_fingerprints(docs)
+    # narrower integer types are accepted and emitted as long
+    ints = spark.createDataFrame([(3, "one two three four five six")], "doc_id int, text string")
+    assert winnowing_fingerprints(ints).collect()[0]["doc_id"] == 3
