@@ -23,6 +23,7 @@ from infoscience_imports_spark.operators import lsh, signatures as sigs, verify
 from infoscience_imports_spark.operators.components import attach_clusters, connected_components
 from infoscience_imports_spark.operators.family import aggregate_families
 from infoscience_imports_spark.operators.upsert import upsert
+from infoscience_imports_spark.session import path_bytes
 from infoscience_imports_spark.operators.similarity import (
     ann_ivf_topk,
     ann_signlsh_topk,
@@ -103,19 +104,9 @@ def _t_par(spark: SparkSession, sf_dir: str, name: str, key: str | None = None) 
     a near-unique column) over round-robin.
     """
     df = _t(spark, sf_dir, name)
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isfile(path):
-            total = os.path.getsize(path)
-        else:
-            total = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(path)
-                for f in fs
-            )
-    except OSError:
+    # an unknown or zero size adds no shuffle: the gate fails closed
+    total = path_bytes(spark, f"{sf_dir}/{name}.parquet")
+    if total is None:
         return df
     par = spark.sparkContext.defaultParallelism
     split = _size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))

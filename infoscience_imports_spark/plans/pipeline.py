@@ -24,6 +24,7 @@ Physical-plan notes (designed for 100 TB, verified on local[32]):
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field
 
@@ -37,6 +38,7 @@ from ..operators import lsh
 from ..operators import signatures as sigs
 from ..operators import verify
 from ..operators.edges import edge_families
+from ..session import path_bytes
 from ..functions.text import extract_text_col, normalize_text_col
 from ..sources.catalog import CheckpointStore, chain_fingerprint
 
@@ -238,27 +240,19 @@ class DedupPipeline:
         html vs extracted text vs narrow buckets); one session-wide split
         size either starves the big scan or shreds the small one into
         hundreds of tasks that each pay the ~100 ms Arrow worker handshake.
-        Local-path sizing only (object-store deployments fall back to the
-        session setting — on a cluster the equivalent knob is per-stage job
-        conf via ``spark.conf.set`` exactly as done here).
+        The size comes from the Hadoop ``FileSystem`` of the snapshot path
+        (``session.path_bytes``), so object-store warehouses are sized the
+        same way; when it is unknown or zero the session setting stands.
         """
-        import os
-
-        if os.environ.get("SPARK_GRAFT_NO_STAGE_TUNE"):
-            return
         src = self._STAGE_SCAN_INPUT.get(stage)
         if src is None:
             return
-        snap = os.path.join(
-            self.store._snap_dir(src, self.fingerprint(src)), "data"
+        total = path_bytes(
+            self.spark,
+            os.path.join(self.store._snap_dir(src, self.fingerprint(src)), "data"),
         )
-        if not os.path.isdir(snap):
+        if total is None:
             return
-        total = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(snap)
-            for f in fs
-        )
         par = self.spark.sparkContext.defaultParallelism
         split = min(128 << 20, max(1 << 20, total // (4 * par)))
         self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))

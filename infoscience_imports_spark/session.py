@@ -5,6 +5,15 @@ AQE on (dynamic coalescing + skew-join splitting), Arrow enabled for the
 vectorized UDF kernels, shuffle partitions sized to cores. On a real cluster
 the same builder is used by ``spark-submit --py-files`` (see ``cli.py``) with
 ``--master`` supplied externally.
+
+Every Parquet file the engine writes (stage snapshots and their manifests,
+streaming state dirs, CLI outputs) is zstd-compressed, set once here through
+``spark.sql.parquet.compression.codec``. zstd is Iceberg's own default Parquet
+codec (``write.parquet.compression-codec``), and the snapshot log follows the
+Iceberg table contract; on the extract snapshot, which holds the normalized
+text of every page, it stores about half the bytes of Spark's default snappy.
+Parquet records the codec per column chunk, so snapshots and state dirs
+written with another codec, or holding files of both, stay readable.
 """
 
 from __future__ import annotations
@@ -54,6 +63,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", default_heap))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -63,6 +73,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def path_bytes(spark: SparkSession, path: str) -> int | None:
+    """Bytes under ``path`` (a file or a directory tree), or ``None`` when
+    the size is unknown or zero.
+
+    Asks the Hadoop ``FileSystem`` of the path, so the same probe serves
+    local, HDFS and object-store paths. Callers that size a plan from this
+    value must leave the plan as it is on ``None``: a gate that cannot
+    measure fails closed.
+    """
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        n = p.getFileSystem(sc._jsc.hadoopConfiguration()).getContentSummary(p).getLength()
+    except Py4JJavaError:  # missing path, unknown scheme, no permission
+        return None
+    return n if n > 0 else None
 
 
 def _parallelism_of(master: str, default: int) -> int:

@@ -225,7 +225,14 @@ class CheckpointStore:
                 ]
             ),
         )
-        pq.write_table(table, os.path.join(tmp, "manifest.parquet"))
+        # the manifest follows the session codec like the data files; Spark
+        # spells "no compression" differently from pyarrow
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec")
+        pq.write_table(
+            table,
+            os.path.join(tmp, "manifest.parquet"),
+            compression={"uncompressed": "none"}.get(codec, codec),
+        )
         total = sum(r["rows"] for r in manifest_rows)
         with open(os.path.join(tmp, "_meta.json"), "w") as f:
             json.dump(
