@@ -137,9 +137,8 @@ def _doc_shingles_hashed(spark, sf_dir):
     from infoscience_imports_spark.functions.shingles import shingle_hashes, token_hashes
     from infoscience_imports_spark.functions.text import normalize_text_py
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # one small parquet file would otherwise pin the kernel to one task
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
+    docs = _t_par(spark, sf_dir, "documents").select("doc_id", "text")
     schema = StructType(
         [
             StructField("doc_id", LongType(), False),
@@ -356,9 +355,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     # one small parquet file = one scan split: without the repartition the
     # 128-perm signature kernel runs as a SINGLE task (measured 6.5 s at
     # sf0.1, all of it on one core)
-    docs = _doc_norm(
-        _t(spark, sf_dir, "documents").repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _doc_norm(_t_par(spark, sf_dir, "documents"))
     # cached: the signature frame feeds candidate generation AND both sides
     # of the shingle verify join — uncached, the Arrow kernel re-runs per
     # consumer (~0.6 s each at sf0.1)
@@ -385,9 +382,7 @@ def q_dedup_simhash_title(spark, sf_dir):
     contract is provably 1.0 and the output equals the brute-force DuckDB
     twin. Fuzzier prefix similarity (Hamming 1-3) stays covered by the e2e
     TITLE_DUP recall test, where truth is the planted classes."""
-    docs = _doc_norm(
-        _t(spark, sf_dir, "documents").repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = _doc_norm(_t_par(spark, sf_dir, "documents"))
     toks = F.filter(F.split("text_norm", " "), lambda x: x != "")
     pf = docs.select(
         "doc_id", F.sort_array(F.slice(toks, 1, 12)).alias("ps")
@@ -426,11 +421,7 @@ def q_containment_substring(spark, sf_dir):
     from infoscience_imports_spark.operators.containment import containment_candidates
 
     cfg = replace(CFG, containment_threshold=1.0)
-    docs = _cached(
-        _doc_norm(
-            _t(spark, sf_dir, "documents").repartition(spark.sparkContext.defaultParallelism)
-        )
-    )
+    docs = _cached(_doc_norm(_t_par(spark, sf_dir, "documents")))
     sg = sigs.compute_signatures(
         docs, cfg, text_col="text_norm", id_col="doc_id", include_shingles=False
     )

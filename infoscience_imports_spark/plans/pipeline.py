@@ -234,12 +234,14 @@ class DedupPipeline:
 
     def _tune_scan_splits(self, stage: str) -> None:
         """Size ``maxPartitionBytes`` to ~4 scan splits per core for THIS
-        stage's dominant input snapshot.
+        stage's dominant input snapshot, clamped to [1 MB, 128 MB].
 
         The kernel-heavy stages read snapshots of very different sizes (raw
         html vs extracted text vs narrow buckets); one session-wide split
         size either starves the big scan or shreds the small one into
         hundreds of tasks that each pay the ~100 ms Arrow worker handshake.
+        The 1 MB floor wins below ``4 * cores`` MB of input: a 2-4 MB
+        snapshot then gets only 2-4 splits, about one per core, not four.
         The size comes from the Hadoop ``FileSystem`` of the snapshot path
         (``session.path_bytes``), so object-store warehouses are sized the
         same way; when it is unknown or zero the session setting stands.
@@ -270,28 +272,33 @@ class DedupPipeline:
         res = PipelineResult(run_id=self.store.run_id)
         prev_split = self.spark.conf.get("spark.sql.files.maxPartitionBytes", None)
         prev_open = self.spark.conf.get("spark.sql.files.openCostInBytes", None)
-        for stage in STAGES:
-            fp = self.fingerprint(stage)
-            res.fingerprints[stage] = fp
-            if stage not in stages:
-                continue
-            if resume and self.store.has_snapshot(stage, fp):
-                res.timings[stage] = 0.0
-                continue
-            t0 = time.monotonic()
-            self._tune_scan_splits(stage)
-            df, key = self._build_stage(stage, pages)
-            info = self.store.write(stage, df, fp, key_col=key)
-            # tracked persists (rep_texts, the gated candidate frame, the
-            # containment sketch table) are scoped to the stage that
-            # created them
+        try:
+            for stage in STAGES:
+                fp = self.fingerprint(stage)
+                res.fingerprints[stage] = fp
+                if stage not in stages:
+                    continue
+                if resume and self.store.has_snapshot(stage, fp):
+                    res.timings[stage] = 0.0
+                    continue
+                t0 = time.monotonic()
+                self._tune_scan_splits(stage)
+                df, key = self._build_stage(stage, pages)
+                info = self.store.write(stage, df, fp, key_col=key)
+                # tracked persists (rep_texts, the gated candidate frame,
+                # the containment sketch table) are scoped to the stage
+                # that created them
+                release_all()
+                res.timings[stage] = time.monotonic() - t0
+                res.rows[stage] = info.rows
+        finally:
+            # a failed stage must not leave its persists or its tuned
+            # split size in the session
             release_all()
-            res.timings[stage] = time.monotonic() - t0
-            res.rows[stage] = info.rows
-        if prev_split is not None:
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-        if prev_open is not None:
-            self.spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
+            if prev_split is not None:
+                self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
+            if prev_open is not None:
+                self.spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
         return res
 
     def _build_stage(self, stage: str, pages: DataFrame) -> tuple[DataFrame, str]:

@@ -6,27 +6,25 @@ into a table-format contract:
 
   {warehouse}/{stage}/snap-{fingerprint}/data/*.parquet   -- stage output
   {warehouse}/{stage}/snap-{fingerprint}/manifest.parquet -- per-file lineage
-  {warehouse}/{stage}/_LATEST                             -- committed pointer
+  {warehouse}/{stage}/snapshot-log.json                   -- commit record
 
-Commits are atomic: data lands in a temp dir, the pointer file is written
-last via rename — a crashed run leaves no half-visible snapshot, so any stage
-is resumable (north_rule). ``fingerprint`` chains the upstream fingerprint +
+The snapshot log is the only commit record (the Iceberg metadata-file
+analogue). A commit writes data and manifest into a temp dir, renames it to
+``snap-{fingerprint}``, then appends the log entry by one ``os.replace`` --
+the single commit point. A crash before that replace leaves a dir that no
+live log entry names: it is invisible to ``has_snapshot``, ``read`` and
+``latest_fingerprint``, and the next run recomputes it, so any stage is
+resumable (north_rule). ``fingerprint`` chains the upstream fingerprint +
 stage config, so resume only reuses a snapshot whose entire ancestry matches.
 
-This container has no Iceberg runtime jars; on a cluster with Iceberg the
-same contract maps 1:1 onto ``writeTo(...).createOrReplace()`` snapshots +
-a manifest table — the store keeps that swap behind one class
-(``IcebergTableStore`` below is that adapter).
-
-The Iceberg *table contract* itself is implemented and tested here, not just
-claimed: every commit appends to an atomic per-stage snapshot log
-(``snapshot-log.json`` — the metadata-file analogue) carrying
-``snapshot_id``, ``parent_id``, operation, summary and the committed schema
-(reads pass it to the scan, so no read pays a schema-inference job — the log
-sits beside the snapshot dirs, not inside them); old snapshots stay
-readable (time travel by snapshot id or timestamp) until
-``expire_snapshots``; ``merge_into`` is a copy-on-write MERGE INTO with
-schema evolution (new source columns are added, absent ones preserved).
+Each log entry carries ``snapshot_id``, ``parent_id``, operation, row count,
+run id and the committed schema (reads pass it to the scan, so no read pays a
+schema-inference job). Old snapshots stay readable (time travel by snapshot
+id or timestamp) until ``expire_snapshots``; ``merge_into`` is a
+copy-on-write MERGE INTO with schema evolution (new source columns are added,
+absent ones preserved). On a cluster with Iceberg the same contract maps onto
+``writeTo(...).createOrReplace()`` commits and the table's ``snapshots`` /
+``files`` metadata tables.
 
 Lineage rows (one per data file): rows, xxhash64-sum checksum, min/max of the
 stage key — generalizing ``source_stats`` (``pipeline_db.py:145-149``).
@@ -77,9 +75,6 @@ class CheckpointStore:
 
     def _snap_dir(self, stage: str, fingerprint: str) -> str:
         return os.path.join(self._stage_dir(stage), f"snap-{fingerprint}")
-
-    def _latest_file(self, stage: str) -> str:
-        return os.path.join(self._stage_dir(stage), "_LATEST")
 
     def _log_file(self, stage: str) -> str:
         return os.path.join(self._stage_dir(stage), "snapshot-log.json")
@@ -132,21 +127,21 @@ class CheckpointStore:
             json.dump(entries, f, indent=1)
         os.replace(tmp, self._log_file(stage))
 
+    def _live_entry(self, stage: str, fingerprint: str) -> dict | None:
+        """The log entry that commits ``fingerprint``, or None. A re-commit
+        marks every earlier entry of the same fingerprint expired, so the
+        newest one is the only candidate."""
+        for e in reversed(self.snapshots(stage)):
+            if e["fingerprint"] == fingerprint:
+                return None if e.get("expired") else e
+        return None
+
     # -- commit / read -------------------------------------------------------
     def has_snapshot(self, stage: str, fingerprint: str) -> bool:
-        snap = self._snap_dir(stage, fingerprint)
-        if not os.path.isdir(os.path.join(snap, "data")):
-            return False
-        # any committed snapshot with this fingerprint is resumable (not just
-        # the latest): the log records every commit, _LATEST kept for
-        # pre-log warehouses
-        if any(e["fingerprint"] == fingerprint for e in self.snapshots(stage)):
-            return True
-        latest = self._latest_file(stage)
-        if not os.path.isfile(latest):
-            return False
-        with open(latest) as f:
-            return f.read().strip() == fingerprint
+        """Any live committed snapshot is resumable, not just the latest."""
+        return self._live_entry(stage, fingerprint) is not None and os.path.isdir(
+            os.path.join(self._snap_dir(stage, fingerprint), "data")
+        )
 
     def write(
         self,
@@ -234,22 +229,15 @@ class CheckpointStore:
             compression={"uncompressed": "none"}.get(codec, codec),
         )
         total = sum(r["rows"] for r in manifest_rows)
-        with open(os.path.join(tmp, "_meta.json"), "w") as f:
-            json.dump(
-                {"stage": stage, "fingerprint": fingerprint, "rows": total, "run_id": self.run_id},
-                f,
-            )
 
         if os.path.isdir(snap):
             shutil.rmtree(snap)
         os.rename(tmp, snap)
-        # log append + pointer write are the commit point (single-writer
+        # the log append's os.replace is the commit point (single-writer
         # atomic swap, same guarantee Iceberg gets from its catalog CAS)
         history = self.snapshots(stage)
         snap_id = (history[-1]["snapshot_id"] + 1) if history else 1
         parent = history[-1]["snapshot_id"] if history else None
-        from datetime import datetime, timezone
-
         self._append_log(
             stage,
             {
@@ -264,31 +252,19 @@ class CheckpointStore:
                 "schema": df.schema.json(),
             },
         )
-        ptr_tmp = self._latest_file(stage) + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(fingerprint)
-        os.replace(ptr_tmp, self._latest_file(stage))
         return SnapshotInfo(stage, fingerprint, snap, total, snap_id)
 
-    def _read_data(self, snap: str, entry: dict | None) -> DataFrame:
+    def _read_data(self, snap: str, entry: dict) -> DataFrame:
         """Scan a snapshot's data files with the schema its log entry
-        recorded at commit — no schema-inference job. Entries written before
-        the log carried a schema fall back to inference."""
-        reader = self.spark.read
-        if entry is not None and "schema" in entry:
-            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
-        return reader.parquet(os.path.join(snap, "data"))
+        recorded at commit — no schema-inference job."""
+        schema = StructType.fromJson(json.loads(entry["schema"]))
+        return self.spark.read.schema(schema).parquet(os.path.join(snap, "data"))
 
     def read(self, stage: str, fingerprint: str | None = None) -> DataFrame:
         fp = fingerprint or self.latest_fingerprint(stage)
-        if fp is None:
-            raise FileNotFoundError(f"no committed snapshot for stage {stage!r}")
-        # the live entry of this fingerprint is the newest one: a re-commit
-        # marks every earlier entry of the same fingerprint expired
-        entry = next(
-            (e for e in reversed(self.snapshots(stage)) if e["fingerprint"] == fp),
-            None,
-        )
+        entry = self._live_entry(stage, fp) if fp else None
+        if entry is None:
+            raise FileNotFoundError(f"stage {stage!r} has no committed snapshot {fp}")
         return self._read_data(self._snap_dir(stage, fp), entry)
 
     # -- time travel (Iceberg VERSION AS OF / TIMESTAMP AS OF) -----------------
@@ -389,22 +365,15 @@ class CheckpointStore:
         return self.write(stage, merged, fp, key_col=key_col, operation="merge")
 
     def rows(self, stage: str, fingerprint: str | None = None) -> int | None:
-        """Committed row count of a snapshot (from its _meta.json), or None."""
+        """Committed row count of a snapshot (from its log entry), or None."""
         fp = fingerprint or self.latest_fingerprint(stage)
-        if fp is None:
-            return None
-        meta = os.path.join(self._snap_dir(stage, fp), "_meta.json")
-        if not os.path.isfile(meta):
-            return None
-        with open(meta) as f:
-            return json.load(f).get("rows")
+        entry = self._live_entry(stage, fp) if fp else None
+        return entry["rows"] if entry else None
 
     def latest_fingerprint(self, stage: str) -> str | None:
-        latest = self._latest_file(stage)
-        if not os.path.isfile(latest):
-            return None
-        with open(latest) as f:
-            return f.read().strip()
+        """Fingerprint of the last committed snapshot, or None."""
+        entries = self.snapshots(stage)
+        return entries[-1]["fingerprint"] if entries else None
 
     def manifest(self, stage: str | None = None) -> DataFrame:
         """All lineage rows across committed snapshots (optionally one stage)."""
@@ -421,84 +390,3 @@ class CheckpointStore:
             raise FileNotFoundError("no committed snapshots")
         return self.spark.read.parquet(*paths)
 
-
-class IcebergTableStore:
-    """Same store surface on a real Iceberg catalog (cluster deployments).
-
-    Untestable in this container (no Iceberg runtime jars) — every method is
-    a direct 1:1 mapping of the ``CheckpointStore`` contract onto Iceberg SQL,
-    kept deliberately one-statement-thin so the parquet store above remains
-    the tested implementation of the semantics. ``catalog`` must name a
-    configured Iceberg catalog (``spark.sql.catalog.<name>`` set).
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str = "dedup"):
-        self.spark = spark
-        self.prefix = f"{catalog}.{namespace}"
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.prefix}")
-
-    def _table(self, stage: str) -> str:
-        return f"{self.prefix}.{stage}"
-
-    def write(self, stage: str, df: DataFrame, fingerprint: str, **_) -> None:
-        df.withColumn("_fingerprint", F.lit(fingerprint)).writeTo(
-            self._table(stage)
-        ).using("iceberg").createOrReplace()
-
-    def read(self, stage: str, fingerprint: str | None = None) -> DataFrame:
-        df = self.spark.read.table(self._table(stage))
-        if fingerprint is not None:
-            df = df.filter(F.col("_fingerprint") == fingerprint)
-        return df.drop("_fingerprint")
-
-    def has_snapshot(self, stage: str, fingerprint: str) -> bool:
-        try:
-            return bool(self.read(stage, fingerprint).limit(1).take(1))
-        except Exception:
-            return False
-
-    def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
-        return self.spark.read.option("snapshot-id", snapshot_id).table(
-            self._table(stage)
-        )
-
-    def read_as_of(self, stage: str, timestamp_iso: str) -> DataFrame:
-        return self.spark.sql(
-            f"SELECT * FROM {self._table(stage)} TIMESTAMP AS OF '{timestamp_iso}'"
-        )
-
-    def snapshot_log(self, stage: str) -> DataFrame:
-        return self.spark.sql(f"SELECT * FROM {self._table(stage)}.snapshots")
-
-    def manifest(self, stage: str) -> DataFrame:
-        return self.spark.sql(f"SELECT * FROM {self._table(stage)}.files")
-
-    def expire_snapshots(self, stage: str, keep_last: int = 2) -> None:
-        self.spark.sql(
-            f"CALL {self.prefix.split('.')[0]}.system.expire_snapshots"
-            f"(table => '{self._table(stage)}', retain_last => {keep_last})"
-        )
-
-    def merge_into(self, stage: str, source: DataFrame, key_col: str) -> None:
-        source.createOrReplaceTempView("_merge_src")
-        cols = [c for c in source.columns if c != key_col]
-        sets = ", ".join(f"t.{c} = COALESCE(s.{c}, t.{c})" for c in cols)
-        # explicit INSERT column list (not INSERT *): the target carries the
-        # counter columns the tested CheckpointStore contract guarantees
-        # (seen_count=1, first_seen/last_seen stamped on insert) which the
-        # source frame does not — INSERT * would fail or diverge against them
-        ins_cols = ", ".join(
-            [key_col] + cols + ["seen_count", "first_seen", "last_seen"]
-        )
-        ins_vals = ", ".join(
-            [f"s.{key_col}"]
-            + [f"s.{c}" for c in cols]
-            + ["1", "current_timestamp()", "current_timestamp()"]
-        )
-        self.spark.sql(
-            f"MERGE INTO {self._table(stage)} t USING _merge_src s "
-            f"ON t.{key_col} = s.{key_col} "
-            f"WHEN MATCHED THEN UPDATE SET {sets}, "
-            f"t.seen_count = t.seen_count + 1, t.last_seen = current_timestamp() "
-            f"WHEN NOT MATCHED THEN INSERT ({ins_cols}) VALUES ({ins_vals})"
-        )

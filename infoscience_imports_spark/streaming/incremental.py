@@ -65,38 +65,14 @@ class IncrementalDedup:
             "state_bucket"
         )
 
-    # -- legacy state migration ------------------------------------------------
-    def _legacy_flat_files(self) -> list[str]:
-        """Flat ``*.parquet`` files written by the pre-partitioned layout."""
-        if not os.path.isdir(self.sig_dir):
-            return []
-        return sorted(
-            os.path.join(self.sig_dir, f)
-            for f in os.listdir(self.sig_dir)
-            if f.endswith(".parquet") and os.path.isfile(os.path.join(self.sig_dir, f))
-        )
-
-    def _migrate_legacy_state(self) -> None:
-        """One-time rewrite of flat (unpartitioned) state into bucket dirs.
-
-        A state dir written before the hash-bucket layout holds bare
-        ``part-*.parquet`` files; treating it as empty would silently
-        re-admit every known digest. Rewrite those rows partitioned, then
-        drop the flat files. A crash between write and delete re-migrates on
-        the next batch — digests get duplicated in state, which the
-        anti-join semantics tolerate (the digest SET is unchanged).
-        """
-        flat = self._legacy_flat_files()
-        if not flat:
-            return
-        legacy = self.spark.read.parquet(*flat)
-        if "state_bucket" in legacy.columns:
-            legacy = legacy.drop("state_bucket")
-        legacy.withColumn("state_bucket", self._bucket_col()).write.mode(
-            "append"
-        ).partitionBy("state_bucket").parquet(self.sig_dir)
-        for p in flat:
-            os.remove(p)
+    def _read_pruned(self, path: str, frame: DataFrame, part_col: str) -> DataFrame | None:
+        """Read a state dir restricted to the partitions ``frame`` touches."""
+        if not os.path.isdir(path) or not any(
+            d.startswith(f"{part_col}=") for d in os.listdir(path)
+        ):
+            return None
+        touched = [r[0] for r in frame.select(part_col).distinct().collect()]
+        return self.spark.read.parquet(path).filter(F.col(part_col).isin(touched))
 
     # -- batch kernel (also used by foreachBatch) ------------------------------
     def _exact_fresh(self, pages: DataFrame):
@@ -105,7 +81,6 @@ class IncrementalDedup:
         underneath is a tracked persist: the caller ends the batch with
         ``release_all()``. No shingle arrays are computed — the per-batch
         verify recomputes them from ``text_norm``."""
-        self._migrate_legacy_state()
         ext = pages.select(
             F.xxhash64("url").alias("doc_id"),
             normalize_text_col(extract_text_col(F.col("html"))).alias("text_norm"),
@@ -117,24 +92,13 @@ class IncrementalDedup:
                 ext, self.cfg, include_shingles=False, keep_text=self._keep_text
             ).withColumn("state_bucket", self._bucket_col())
         )
-        has_state = os.path.isdir(self.sig_dir) and any(
-            d.startswith("state_bucket=") for d in os.listdir(self.sig_dir)
+        # tiny driver list (≤ n_state_buckets ints) -> partition pruning:
+        # only the state partitions this batch can collide with are read
+        known = self._read_pruned(self.sig_dir, sg, "state_bucket")
+        fresh = (
+            sg if known is None
+            else sg.join(known.select("digest"), on="digest", how="left_anti")
         )
-        if has_state:
-            # tiny driver list (≤ n_state_buckets ints) -> partition
-            # pruning: only the state partitions this batch can collide
-            # with are read
-            touched = [
-                r[0] for r in sg.select("state_bucket").distinct().collect()
-            ]
-            known = (
-                self.spark.read.parquet(self.sig_dir)
-                .filter(F.col("state_bucket").isin(touched))
-                .select("digest")
-            )
-            fresh = sg.join(known, on="digest", how="left_anti")
-        else:
-            fresh = sg
         # within-batch exact dedup: keep min doc_id per digest
         from pyspark.sql import Window
 
@@ -256,18 +220,18 @@ class IncrementalNearDedup(IncrementalDedup):
     (``verify.verify_tagged_pairs``, minhash rule, shingle sets recomputed
     from stored ``text_norm``), and clustered.
 
-    State layout — hash-partitioned dirs so every per-batch read is
-    partition-pruned by a tiny driver list (same discipline as the digest
-    state):
+    State layout — one layout, hash-partitioned dirs so every per-batch
+    read is partition-pruned by a tiny driver list (same discipline as the
+    digest state, which is partitioned by ``state_bucket``):
       * ``buckets``  (band, bucket, old_id)  by bpart = pmod(xxhash64(band, bucket))
       * ``docsigs``  (doc_id, n_shingles, bands, simhash64, bottomk, text_norm)
                                              by dpart = pmod(xxhash64(doc_id))
       * ``clusters`` (doc_id, cluster_id)    by dpart
       * ``edges``    (id1, id2, batch_id, epoch), unpartitioned: the
         verified-edge history that :meth:`compact` runs CC over
-    Doc state holds no shingle arrays; files written when it did still
-    read (the extra column is ignored). Doc state written before
-    ``text_norm`` was stored cannot be verified against — re-ingest it.
+    State in any other layout (flat digest files, doc state without
+    ``bands``/``text_norm``, epoch-less edges, clusters without ``dpart``)
+    is not read: re-ingest its pages into a fresh state dir.
 
     Boundedness: bucket state inserts stop once a (band, bucket) holds
     ``cfg.bucket_cap`` members — later docs in that bucket still link
@@ -335,15 +299,6 @@ class IncrementalNearDedup(IncrementalDedup):
 
     def _part(self, *cols):
         return F.pmod(F.xxhash64(*cols), F.lit(self.n_state_buckets)).cast("int")
-
-    def _read_pruned(self, path: str, frame: DataFrame, part_col: str) -> DataFrame | None:
-        """Read a state dir restricted to the partitions ``frame`` touches."""
-        if not os.path.isdir(path) or not any(
-            d.startswith(f"{part_col}=") for d in os.listdir(path)
-        ):
-            return None
-        touched = [r[0] for r in frame.select(part_col).distinct().collect()]
-        return self.spark.read.parquet(path).filter(F.col(part_col).isin(touched))
 
     def process_batch(self, pages: DataFrame, batch_id: int) -> None:
         from ..operators import lsh
@@ -735,8 +690,8 @@ class IncrementalNearDedup(IncrementalDedup):
         edge therefore cannot change, and the scoped labels equal a full
         CC's (the full component containing a new edge is exactly the union
         of the affected old clusters). ``full_cc=True`` forces the full
-        rebuild (base case; also what a legacy state dir gets on its first
-        compact). ``count_clusters=False`` skips the global distinct-count
+        rebuild (the base case, which every state dir also gets on its
+        first compact). ``count_clusters=False`` skips the global distinct-count
         metric (``clusters_before/after`` become None; ``merged`` stays
         exact from the scoped counts) — the auto-cadence path uses this.
 
@@ -790,26 +745,14 @@ class IncrementalNearDedup(IncrementalDedup):
         new_frames: list[DataFrame] = []
         n_edges = 0
         if os.path.isdir(self.edge_dir):
-            # mergeSchema: a legacy edge dir extended by epoch-stamped
-            # appends holds files with AND without the epoch column; a
-            # single-footer read could infer an epoch-less schema and
-            # silently treat the NEW rows as already reflected. On Iceberg
-            # this is the table-schema read, not a footer merge.
-            stored = self.spark.read.option("mergeSchema", "true").parquet(self.edge_dir)
+            stored = self.spark.read.parquet(self.edge_dir)
             n_edges = stored.count()
             if n_edges:
-                if scoped and "epoch" in stored.columns:
+                if scoped:
                     # epoch is constant per file — footer min/max stats skip
                     # every already-reflected file (Iceberg: metadata prune)
-                    fresh_stored = stored.filter(F.col("epoch") > F.lit(cc_epoch))
-                elif scoped:
-                    # cc_edge_epoch is set but no append ever wrote an epoch
-                    # column: nothing landed after the pass that set it
-                    fresh_stored = None
-                else:
-                    fresh_stored = stored
-                if fresh_stored is not None:
-                    new_frames.append(fresh_stored.select("id1", "id2"))
+                    stored = stored.filter(F.col("epoch") > F.lit(cc_epoch))
+                new_frames.append(stored.select("id1", "id2"))
         deep_scope = "none"
         next_wm = None
         deep_gen_s = 0.0
@@ -891,7 +834,6 @@ class IncrementalNearDedup(IncrementalDedup):
                 "cc_mode": "scoped" if scoped else "full",
             }
         t_cc = time.monotonic()
-        has_dpart = "dpart" in clusters.columns
         if scoped:
             # Scope the CC to the clusters the new edges TOUCH (round-5):
             # the invariant maintained by _advance_watermarks is that the
@@ -908,15 +850,9 @@ class IncrementalNearDedup(IncrementalDedup):
                 .unionByName(new_edges.select(F.col("id2").alias("doc_id")))
                 .distinct()
             )
-            base = None
-            if has_dpart:
-                base = self._read_pruned(
-                    self.cluster_dir,
-                    ends.withColumn("dpart", self._part("doc_id")),
-                    "dpart",
-                )
-            if base is None:
-                base = clusters
+            base = self._read_pruned(
+                self.cluster_dir, ends.withColumn("dpart", self._part("doc_id")), "dpart"
+            )
             affected = (
                 base.join(ends, on="doc_id", how="left_semi")
                 .select("cluster_id")
@@ -947,20 +883,19 @@ class IncrementalNearDedup(IncrementalDedup):
         # Docs absent from the CC assignment fall back to their EXISTING
         # cluster_id (for seeded prior members that is never reached; this
         # covers true singletons, whose cluster_id == doc_id).
-        # dpart rides along from the STORED rows (when present): the scoped
-        # rewrite below selects touched partitions by the layout on disk,
-        # not by re-deriving pmod(xxhash64(doc_id)) — a state dir reopened
-        # with a different --state-buckets would otherwise hardlink the
-        # changed docs' real partition dirs through with stale labels while
+        # dpart rides along from the STORED rows: the scoped rewrite below
+        # selects touched partitions by the layout on disk, not by
+        # re-deriving pmod(xxhash64(doc_id)) — a state dir reopened with a
+        # different --state-buckets would otherwise hardlink the changed
+        # docs' real partition dirs through with stale labels while
         # rewriting the wrong ones (round-5 ADVICE). Open-time validation in
-        # __init__ rejects the misconfiguration outright; this keeps the
-        # rewrite self-consistent even for legacy dirs predating the stamp.
-        _relabel_cols = ["doc_id"] + (["dpart"] if has_dpart else [])
+        # __init__ rejects the misconfiguration outright.
         relabeled = persist_tracked(
-            scope_members.select(*_relabel_cols, F.col("cluster_id").alias("_prior"))
+            scope_members.select("doc_id", "dpart", F.col("cluster_id").alias("_prior"))
             .join(assign, on="doc_id", how="left")
             .select(
-                *_relabel_cols,
+                "doc_id",
+                "dpart",
                 F.coalesce("cluster_id", "_prior").alias("cluster_id"),
                 F.col("_prior").alias("prior_cluster"),
             )
@@ -1004,7 +939,7 @@ class IncrementalNearDedup(IncrementalDedup):
             }
         tmp = self.cluster_dir + ".compact-tmp"
         touched_n = None
-        if scoped and has_dpart:
+        if scoped:
             # rewrite ONLY the state partitions holding a changed doc;
             # untouched partition dirs are hardlinked into the swap tmp
             # (same filesystem by construction). On an object store this
@@ -1122,14 +1057,11 @@ class IncrementalNearDedup(IncrementalDedup):
         pipeline's edges stage calls, with its union order, single gated
         candidate count, thresholds and verify kernels (reference
         semantics: ``deduplicator.py:117-139`` cascade over a full
-        re-harvest). Only those columns are scanned and cached, so state
-        files that still carry the old ``shingles`` arrays cost nothing
-        extra. Returns a lineage-cut (id1, id2) frame, or ``None`` with no
-        state. The state scans are tracked persists, freed by
-        :meth:`compact`'s ``release_all()``. Raises on state written by a
-        pre-deep version (no text/bands columns): deep compaction cannot be
-        retrofitted onto lossy state — re-ingest or run the batch pipeline
-        over the raw pages instead.
+        re-harvest). Only those columns are scanned and cached; a doc whose
+        page had no html (NULL ``text_norm``) verifies as empty text and
+        stays a singleton. Returns a lineage-cut (id1, id2) frame, or
+        ``None`` with no state. The state scans are tracked persists, freed
+        by :meth:`compact`'s ``release_all()``.
 
         ``scope_docs`` (incremental mode): a frame of doc_ids admitted since
         the last deep pass, passed to ``edge_families`` as its ``scope``:
@@ -1144,29 +1076,11 @@ class IncrementalNearDedup(IncrementalDedup):
 
         if not os.path.isdir(self.docsig_dir):
             return None
-        state = self.spark.read.parquet(self.docsig_dir)
-        needed = ["doc_id", "n_shingles", "bands", "simhash64", "bottomk", "text_norm"]
-        missing = set(needed) - set(state.columns)
-        if missing:
-            raise ValueError(
-                "deep compaction needs text-self-contained doc state; "
-                f"{self.docsig_dir} lacks {sorted(missing)} (written by a "
-                "pre-deep version) — re-ingest, or run the batch pipeline "
-                "over the raw pages instead"
+        state = persist_tracked(
+            self.spark.read.parquet(self.docsig_dir).select(
+                "doc_id", "n_shingles", "bands", "simhash64", "bottomk", "text_norm"
             )
-        # a dir UPGRADED mid-stream passes the column check (parquet schema
-        # merge fills old files' missing columns with nulls) but its
-        # pre-upgrade rows would silently drop out of every rule family —
-        # the guard must catch partial state too, not just missing columns
-        if state.filter(F.col("text_norm").isNull() | F.col("bands").isNull()).limit(1).count():
-            raise ValueError(
-                "deep compaction found doc-state rows with NULL "
-                f"text_norm/bands in {self.docsig_dir} — state written "
-                "partly by a pre-deep version cannot be deep-compacted "
-                "(those docs would silently skip every rule family); "
-                "re-ingest, or run the batch pipeline over the raw pages"
-            )
-        state = persist_tracked(state.select(*needed))
+        )
         scope = None
         if scope_docs is not None:
             scope = scope_docs.select("doc_id")

@@ -5,24 +5,35 @@ import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from infoscience_imports_spark.config import DedupConfig
 from infoscience_imports_spark.plans.pipeline import DedupPipeline, STAGES
+from infoscience_imports_spark.sources import catalog
 from infoscience_imports_spark.sources.catalog import CheckpointStore
 from infoscience_imports_spark.sources.synthetic import pipeline_input
 
 
-def test_resume_skips_committed_stages(spark, tiny_pages):
+@pytest.fixture(scope="module")
+def committed(spark, tiny_pages):
+    """One uninterrupted run over tiny_pages: (pipeline, its result)."""
     wh = tempfile.mkdtemp(prefix="wh-ck1-")
-    store = CheckpointStore(spark, wh)
-    pipe = DedupPipeline(spark, store, DedupConfig(), input_fingerprint="ck200")
-    pages = pipeline_input(tiny_pages)
-    r1 = pipe.run(pages)
-    assert all(r1.timings[s] > 0 for s in STAGES)
-    r2 = pipe.run(pages)
-    assert all(r2.timings[s] == 0.0 for s in STAGES)
+    pipe = DedupPipeline(spark, CheckpointStore(spark, wh), DedupConfig(), input_fingerprint="ck200")
+    yield pipe, pipe.run(pipeline_input(tiny_pages))
     shutil.rmtree(wh)
+
+
+def _clusters(pipe: DedupPipeline) -> list:
+    return sorted((r["doc_id"], r["cluster_id"]) for r in pipe.clusters().collect())
+
+
+def test_resume_skips_committed_stages(tiny_pages, committed):
+    pipe, r1 = committed
+    assert all(r1.timings[s] > 0 for s in STAGES)
+    r2 = pipe.run(pipeline_input(tiny_pages))
+    assert all(r2.timings[s] == 0.0 for s in STAGES)
 
 
 def test_resume_after_stage_loss_is_byte_identical(spark, tiny_pages):
@@ -42,11 +53,9 @@ def test_resume_after_stage_loss_is_byte_identical(spark, tiny_pages):
     shutil.rmtree(wh)
 
 
-def test_manifest_lineage_covers_all_stages(spark, tiny_pages):
-    wh = tempfile.mkdtemp(prefix="wh-ck3-")
-    store = CheckpointStore(spark, wh)
-    pipe = DedupPipeline(spark, store, DedupConfig(), input_fingerprint="ck200")
-    pipe.run(pipeline_input(tiny_pages))
+def test_manifest_lineage_covers_all_stages(committed):
+    pipe, _ = committed
+    store = pipe.store
     m = store.manifest()
     stages = {r["stage"] for r in m.select("stage").distinct().collect()}
     assert stages == set(STAGES)
@@ -59,7 +68,6 @@ def test_manifest_lineage_covers_all_stages(spark, tiny_pages):
         )
         actual = store.read(st, pipe.fingerprint(st)).count()
         assert manifest_rows == actual, st
-    shutil.rmtree(wh)
 
 
 def test_snapshot_log_and_time_travel(spark):
@@ -172,8 +180,7 @@ def test_merge_into_upsert_and_schema_evolution(spark):
 
 def test_read_uses_logged_schema_without_inference_job(spark, jobs_submitted):
     """A commit records its schema in the snapshot log, so read() and
-    read_snapshot() build the scan without a schema-inference job; a log
-    entry without a schema (older warehouse) still reads by inference."""
+    read_snapshot() build the scan without a schema-inference job."""
     wh = tempfile.mkdtemp(prefix="wh-ck9-")
     store = CheckpointStore(spark, wh)
     df = spark.createDataFrame(
@@ -187,15 +194,85 @@ def test_read_uses_logged_schema_without_inference_job(spark, jobs_submitted):
     inferred = spark.read.parquet(os.path.join(store._snap_dir("tbl", "fp1"), "data"))
     assert latest.schema == by_id.schema == inferred.schema
     assert sorted(latest.collect()) == sorted(inferred.collect())
+    shutil.rmtree(wh)
 
-    log = store._log_file("tbl")
-    with open(log) as f:
-        entries = json.load(f)
-    del entries[0]["schema"]
-    with open(log, "w") as f:
-        json.dump(entries, f)
-    assert sorted(r["id"] for r in store.read("tbl").collect()) == [1, 2]
-    assert store.read_snapshot("tbl", 1).schema == inferred.schema
+
+class _FailOnce:
+    """Raises on the first call whose arguments match ``when``, then
+    delegates to ``fn``: one injected crash per test step."""
+
+    def __init__(self, fn, when=lambda *a: True):
+        self.fn, self.when, self.fired = fn, when, False
+
+    def __call__(self, *args, **kwargs):
+        if not self.fired and self.when(*args):
+            self.fired = True
+            raise OSError("injected crash")
+        return self.fn(*args, **kwargs)
+
+
+class _CatalogOs:
+    """The ``os`` module as ``sources.catalog`` sees it, with overrides."""
+
+    def __init__(self, **overrides):
+        self.__dict__.update(overrides)
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+
+def test_commit_crash_at_each_step_leaves_previous_snapshot(spark, monkeypatch):
+    """The snapshot log's replace is the single commit point: a crash after
+    the data write, at the rename into ``snap-<fp>`` or at the log replace
+    leaves the new fingerprint uncommitted and the latest one unchanged."""
+    wh = tempfile.mkdtemp(prefix="wh-crash-")
+    store = CheckpointStore(spark, wh)
+    store.write("tbl", spark.range(3), "fp0", key_col="id")
+    crashes = {
+        "after data write": (pq, "write_table", _FailOnce(pq.write_table)),
+        "rename into snap": (catalog, "os", _CatalogOs(rename=_FailOnce(os.rename))),
+        "log replace": (catalog, "os", _CatalogOs(replace=_FailOnce(os.replace))),
+    }
+    for step, (target, name, fault) in crashes.items():
+        fp = f"fp-{step.replace(' ', '-')}"
+        with monkeypatch.context() as m:
+            m.setattr(target, name, fault)
+            with pytest.raises(OSError, match="injected"):
+                store.write("tbl", spark.range(5), fp, key_col="id")
+        assert not store.has_snapshot("tbl", fp), step
+        assert store.latest_fingerprint("tbl") == "fp0", step
+        assert store.rows("tbl") == 3, step
+        with pytest.raises(FileNotFoundError):
+            store.read("tbl", fp)
+    # the crashed fingerprint commits cleanly on retry
+    store.write("tbl", spark.range(5), "fp-log-replace", key_col="id")
+    assert store.latest_fingerprint("tbl") == "fp-log-replace"
+    assert store.read("tbl").count() == 5
+    shutil.rmtree(wh)
+
+
+def test_resume_after_crash_at_edges_commit_matches_uninterrupted_run(
+    spark, tiny_pages, committed, monkeypatch
+):
+    """A run that crashes at the edges log replace resumes from the
+    committed buckets snapshot to the clusters of an uninterrupted run, and
+    the crashed run leaves the session's scan split size as it found it."""
+    split = "spark.sql.files.maxPartitionBytes"
+    split_before = spark.conf.get(split)
+    pages = pipeline_input(tiny_pages)
+    wh = tempfile.mkdtemp(prefix="wh-crash-run-")
+    pipe = DedupPipeline(spark, CheckpointStore(spark, wh), DedupConfig(), input_fingerprint="ck200")
+    edges_log = os.path.join(wh, "edges", "snapshot-log.json")
+    fault = _FailOnce(os.replace, when=lambda src, dst: dst == edges_log)
+    with monkeypatch.context() as m:
+        m.setattr(catalog, "os", _CatalogOs(replace=fault))
+        with pytest.raises(OSError, match="injected"):
+            pipe.run(pages)
+    assert fault.fired and not pipe.store.has_snapshot("edges", pipe.fingerprint("edges"))
+    assert spark.conf.get(split) == split_before
+    r = pipe.run(pages)
+    assert r.timings["buckets"] == 0.0 and r.timings["edges"] > 0
+    assert _clusters(pipe) == _clusters(committed[0])
     shutil.rmtree(wh)
 
 

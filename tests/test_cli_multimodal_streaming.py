@@ -117,41 +117,6 @@ def test_incremental_streaming_dedup(spark):
     shutil.rmtree(in_dir)
 
 
-def test_incremental_legacy_flat_state_migrates(spark):
-    """A state dir written by the pre-partitioned (flat parquet) layout must
-    not be treated as empty: the first batch migrates it to bucket dirs and
-    known digests stay deduplicated."""
-    from infoscience_imports_spark.functions.text import extract_text_col, normalize_text_col
-    from infoscience_imports_spark.operators import signatures as sigs
-
-    state = tempfile.mkdtemp(prefix="stream-legacy-")
-    pages = pipeline_input(generate_web_pages(spark, 60, seed=7))
-    cfg = DedupConfig(shuffle_partitions=8)
-    inc = IncrementalDedup(spark, state, cfg)
-
-    # simulate the old layout: signatures written FLAT (no state_bucket dirs)
-    ext = pages.select(
-        F.xxhash64("url").alias("doc_id"),
-        normalize_text_col(extract_text_col(F.col("html"))).alias("text_norm"),
-    )
-    legacy = sigs.compute_signatures(ext, cfg)
-    legacy.write.mode("overwrite").parquet(inc.sig_dir)
-    assert inc._legacy_flat_files()
-
-    # re-process the SAME pages as batch 0: every digest is already known,
-    # so nothing may land in new_unique
-    inc.process_batch(pages, batch_id=0)
-    assert not inc._legacy_flat_files()  # flat files rewritten + removed
-    assert any(d.startswith("state_bucket=") for d in os.listdir(inc.sig_dir))
-    assert not os.path.isdir(inc.new_dir) or spark.read.parquet(inc.new_dir).count() == 0
-    # a genuinely new batch still gets admitted after migration
-    pages2 = pipeline_input(generate_web_pages(spark, 30, seed=99))
-    inc.process_batch(pages2, batch_id=1)
-    fresh = spark.read.parquet(inc.new_dir).filter(F.col("batch_id") == 1).count()
-    assert fresh > 0
-    shutil.rmtree(state)
-
-
 def test_incremental_lsh_links_neardup_to_earlier_cluster(spark):
     """Round-2 verdict 'what's missing' #5: a NEAR-dup (not exact) arriving
     in a later micro-batch must link to its earlier cluster via LSH
@@ -205,6 +170,45 @@ def test_incremental_lsh_links_neardup_to_earlier_cluster(spark):
     assert spark.read.parquet(inc.new_dir).count() == 4
     # verify recomputes shingle sets from text_norm: none are stored
     assert "shingles" not in spark.read.parquet(inc.docsig_dir).columns
+    shutil.rmtree(state)
+
+
+def test_deep_compact_every_batch_with_null_html_page(spark):
+    """A page with NULL html is stored with a NULL text_norm. Deep
+    compaction after every batch still runs over that state: the next
+    batch's near-dup joins the earlier cluster and the NULL-html doc stays
+    a singleton."""
+    import datetime
+
+    from infoscience_imports_spark.sources.synthetic import render_html
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    state = tempfile.mkdtemp(prefix="stream-null-html-")
+    inc = IncrementalNearDedup(
+        spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8, deep_compact_every=1
+    )
+    words = [f"tok{i:03d}" for i in range(200)]
+    ts = datetime.datetime(2026, 1, 1)
+    schema = "url string, warc_ts timestamp, html binary, lang string"
+
+    def page(url, text):
+        return (url, ts, None if text is None else bytearray(render_html(text, "t")), "en")
+
+    b0 = [page("https://a.test/1", " ".join(words)), page("https://empty.test/1", None)]
+    inc.process_batch(spark.createDataFrame(b0, schema), 0)
+    near = " ".join(words[:-2] + ["changed", "ending"])
+    inc.process_batch(spark.createDataFrame([page("https://a-mirror.test/1", near)], schema), 1)
+    assert inc.last_compact_metrics["deep_scope"] == "incremental"
+    urls = ["https://a.test/1", "https://a-mirror.test/1", "https://empty.test/1"]
+    ids = dict(
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .select("url", F.xxhash64("url"))
+        .collect()
+    )
+    a, mirror, empty = (ids[u] for u in urls)
+    cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
+    assert cl[mirror] == cl[a]
+    assert cl[empty] == empty
     shutil.rmtree(state)
 
 
@@ -598,9 +602,9 @@ def test_compact_preserves_merges_older_than_edge_state(spark):
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(
         inc.cluster_dir
     )
-    spark.createDataFrame([(30, 40, 0)], "id1 long, id2 long, batch_id int").write.parquet(
-        inc.edge_dir
-    )
+    spark.createDataFrame(
+        [(30, 40, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     m = inc.compact()
     cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
     assert cl[1] == 1 and cl[2] == 1, "pre-edge-state merge must survive compaction"
@@ -624,9 +628,9 @@ def test_compact_seed_prevents_pre_edge_cluster_split(spark):
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(
         inc.cluster_dir
     )
-    spark.createDataFrame([(10, 5, 0)], "id1 long, id2 long, batch_id int").write.parquet(
-        inc.edge_dir
-    )
+    spark.createDataFrame(
+        [(10, 5, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     m = inc.compact()
     cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
     assert cl == {5: 5, 10: 5, 20: 5}, f"old partner stranded on stale label: {cl}"
@@ -703,41 +707,6 @@ def test_deep_compact_dedups_reversed_stored_edges(spark):
     n_after = edges.count()
     assert n_after == n_before, "deep compact re-appended an already-known reversed edge"
     assert edges.distinct().count() == n_after
-    shutil.rmtree(state)
-
-
-def test_deep_compact_rejects_partially_migrated_state(spark):
-    """Round-4 review: a docsig dir holding BOTH pre-deep (narrow) and
-    post-deep (wide) files passes a column-presence check via parquet
-    schema fill — deep compaction must still refuse (nulls would silently
-    drop the old docs from every rule family)."""
-    import datetime
-
-    from infoscience_imports_spark.sources.synthetic import render_html
-    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
-
-    state = tempfile.mkdtemp(prefix="deep-mixed-")
-    inc = IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8)
-    ts = datetime.datetime(2026, 1, 1)
-    text = " ".join(f"tok{i:04d}" for i in range(120))
-    inc.process_batch(
-        spark.createDataFrame(
-            [Row(url="https://m1.test/", warc_ts=ts, html=bytearray(render_html(text, "t")), lang="en")]
-        ),
-        0,
-    )
-    # sneak a pre-deep (narrow) file into the same state dir: that layout
-    # stored a shingle array and no text_norm/bands
-    spark.read.parquet(inc.docsig_dir).select(
-        "doc_id",
-        F.array(F.lit(0).cast("long")).alias("shingles"),
-        F.lit(1).alias("n_shingles"),
-        "dpart",
-    ).limit(1).withColumn("doc_id", F.col("doc_id") + 1).write.mode("append").partitionBy(
-        "dpart"
-    ).parquet(inc.docsig_dir)
-    with pytest.raises(ValueError, match="pre-deep|NULL"):
-        inc.compact(deep=True)
     shutil.rmtree(state)
 
 
@@ -899,9 +868,11 @@ def test_compact_scoped_cc_matches_full_rebuild(spark):
         [(1, 1), (2, 2), (3, 3), (4, 3), (5, 5), (6, 6)],
         "doc_id long, cluster_id long",
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(inc.cluster_dir)
-    # epoch-less legacy edge: the first compact runs FULL (base case) and
-    # sets the epoch watermark
-    spark.createDataFrame([(1, 2, 0)], "id1 long, id2 long, batch_id int").write.parquet(inc.edge_dir)
+    # no epoch watermark yet: the first compact runs FULL (base case) and
+    # sets it
+    spark.createDataFrame(
+        [(1, 2, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     m0 = inc.compact()
     assert m0["cc_mode"] == "full" and m0["merged"] == 1, m0
     assert inc._cc_epoch() == 1
@@ -937,7 +908,9 @@ def test_compact_converged_pass_leaves_state_untouched(spark):
     spark.createDataFrame(
         [(1, 1), (2, 1), (3, 3)], "doc_id long, cluster_id long"
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(inc.cluster_dir)
-    spark.createDataFrame([(1, 2, 0)], "id1 long, id2 long, batch_id int").write.parquet(inc.edge_dir)
+    spark.createDataFrame(
+        [(1, 2, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     m0 = inc.compact()  # full base pass; (1,2) already merged -> no rewrite
     assert m0["cc_mode"] == "full" and m0["merged"] == 0, m0
     before = _inode_map(inc.cluster_dir)
@@ -966,7 +939,7 @@ def test_compact_scoped_rewrite_hardlinks_untouched_partitions(spark):
         "doc_id long, cluster_id long",
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(inc.cluster_dir)
     spark.createDataFrame(
-        [(42, 41, 0)], "id1 long, id2 long, batch_id int"
+        [(42, 41, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
     ).write.parquet(inc.edge_dir)
     m0 = inc.compact()  # reflects the seed edge: sets the epoch, swaps nothing
     assert m0["merged"] == 0
@@ -1056,9 +1029,9 @@ def test_compact_restores_component_min_label_on_pure_relabel(spark):
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(
         inc.cluster_dir
     )
-    spark.createDataFrame([(5, 10, 0)], "id1 long, id2 long, batch_id int").write.parquet(
-        inc.edge_dir
-    )
+    spark.createDataFrame(
+        [(5, 10, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     m = inc.compact()
     assert m["merged"] == 0, m  # one prior cluster -> one component
     cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
@@ -1083,9 +1056,9 @@ def test_compact_converged_pass_does_not_advance_edge_epoch(spark):
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(
         inc.cluster_dir
     )
-    spark.createDataFrame([(2, 1, 0)], "id1 long, id2 long, batch_id int").write.parquet(
-        inc.edge_dir
-    )
+    spark.createDataFrame(
+        [(2, 1, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     inc.compact()
     e1 = inc._cc_epoch()
     assert e1 is not None
@@ -1116,9 +1089,9 @@ def test_reopen_with_different_state_buckets_rejected(spark):
     ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(
         inc.cluster_dir
     )
-    spark.createDataFrame([(2, 1, 0)], "id1 long, id2 long, batch_id int").write.parquet(
-        inc.edge_dir
-    )
+    spark.createDataFrame(
+        [(2, 1, 0, inc._edge_epoch())], "id1 long, id2 long, batch_id int, epoch int"
+    ).write.parquet(inc.edge_dir)
     inc.compact()  # stamps n_state_buckets into _compact_meta.json
     # same count reopens fine
     IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8)

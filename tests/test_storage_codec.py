@@ -74,6 +74,17 @@ def test_every_written_parquet_file_is_zstd(spark, tiny_pages, zstd_run):
         assert any(p.startswith(d + os.sep) for p in streamed), d
     bad = {p: c for p, c in {**snap, **streamed}.items() if c != {"ZSTD"}}
     assert not bad
+    # one state layout: every edge-state file carries the epoch column
+    edge_files = [p for p in streamed if p.startswith(inc.edge_dir + os.sep)]
+    assert all("epoch" in pq.read_schema(p).names for p in edge_files)
+    # one commit record: the snapshot log, no pointer or per-snapshot meta file
+    stray = [
+        os.path.join(r, f)
+        for r, _d, fs in os.walk(wh)
+        for f in fs
+        if f in ("_LATEST", "_meta.json")
+    ]
+    assert not stray
     shutil.rmtree(state)
 
 
@@ -161,6 +172,25 @@ def test_t_par_adds_no_exchange_when_size_unknown(spark, monkeypatch):
     # ... but not when its size cannot be measured
     monkeypatch.setattr(E, "path_bytes", lambda spark, path: None)
     assert not _has_exchange(E._t_par(spark, root, "t", key="id"))
+    shutil.rmtree(root)
+
+
+def test_entry_dedup_adds_no_repartition_when_size_unknown(spark, monkeypatch):
+    """The entry queries gate their documents repartition through ``_t_par``:
+    with an unknown table size the plan has no round-robin exchange."""
+    import __spark_entry__ as E
+
+    root = tempfile.mkdtemp(prefix="entry-par-")
+    spark.createDataFrame(
+        [(i, f"doc {i} " + " ".join(f"w{j}" for j in range(i, i + 12))) for i in range(20)],
+        "doc_id long, text string",
+    ).write.parquet(os.path.join(root, "documents.parquet"))
+    monkeypatch.setattr(E, "path_bytes", lambda spark, path: None)
+    try:
+        plan = E.q_dedup_minhash_lsh(spark, root)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        E.release_caches()
+    assert "RoundRobinPartitioning" not in plan
     shutil.rmtree(root)
 
 
