@@ -73,12 +73,27 @@ class DedupPipeline:
         # verify; sym edge count vs cc_local_max_edges decides local-vs-
         # distributed components
         self.metrics: dict[str, int | bool] = {}
+        # stage -> {gate: {"value", "threshold", "branch"}} of the stage being
+        # built, stored in its snapshot-log entry by the commit
+        self._gates: dict[str, dict] = {}
 
     # -- stage fingerprints chain --------------------------------------------
     def fingerprint(self, stage: str) -> str:
         idx = STAGES.index(stage)
         parts = [self.input_fp, self.cfg_fp] + list(STAGES[: idx + 1])
         return chain_fingerprint(*parts)
+
+    def _gate(self, stage: str, name: str, value: int | None) -> str:
+        """Branch of a ``broadcast_pair_limit`` gate on a measured ``value``
+        (unknown -> shuffle), recorded for ``stage``'s commit."""
+        limit = self.cfg.broadcast_pair_limit
+        branch = "broadcast" if value is not None and value <= limit else "shuffle"
+        self._gates.setdefault(stage, {})[name] = {
+            "value": value,
+            "threshold": limit,
+            "branch": branch,
+        }
+        return branch
 
     # -- stage bodies ----------------------------------------------------------
     def _extract(self, pages: DataFrame) -> DataFrame:
@@ -164,7 +179,7 @@ class DedupPipeline:
         keyed = extract_df.withColumn("digest", F.xxhash64("text_norm"))
         mins = keyed.groupBy("digest").agg(F.min("doc_id").alias("rep_id"))
         n_docs = self.store.rows("extract", self.fingerprint("extract"))
-        if n_docs is not None and n_docs <= self.cfg.broadcast_pair_limit:
+        if self._gate("signatures", "extract_rows", n_docs) == "broadcast":
             with_rep = keyed.join(F.broadcast(mins), on="digest")
         else:
             with_rep = keyed.join(mins, on="digest")
@@ -214,7 +229,9 @@ class DedupPipeline:
             n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
         )
         self.metrics["candidate_pairs"] = n_cands
-        self.metrics["verify_broadcast_gated"] = n_cands <= self.cfg.broadcast_pair_limit
+        self.metrics["verify_broadcast_gated"] = (
+            self._gate("edges", "candidate_pairs", n_cands) == "broadcast"
+        )
         return verify.combine_edges(verify.exact_edges(signatures), fuzzy)
 
     def _components(self, edges: DataFrame, extract_df: DataFrame) -> DataFrame:
@@ -250,10 +267,8 @@ class DedupPipeline:
         src = self._STAGE_SCAN_INPUT.get(stage)
         if src is None:
             return
-        total = path_bytes(
-            self.spark,
-            os.path.join(self.store._snap_dir(src, self.fingerprint(src)), "data"),
-        )
+        entry = self.store.live_entry(src, self.fingerprint(src))
+        total = path_bytes(self.spark, os.path.join(entry["path"], "data")) if entry else None
         if total is None:
             return
         par = self.spark.sparkContext.defaultParallelism
@@ -285,7 +300,9 @@ class DedupPipeline:
                 t0 = time.monotonic()
                 self._tune_scan_splits(stage)
                 df, key = self._build_stage(stage, pages)
-                info = self.store.write(stage, df, fp, key_col=key)
+                info = self.store.write(
+                    stage, df, fp, key_col=key, gates=self._gates.pop(stage, None)
+                )
                 # tracked persists (rep_texts, the gated candidate frame,
                 # the containment sketch table) are scoped to the stage
                 # that created them

@@ -1,33 +1,44 @@
-"""Checkpoint store: atomic snapshot commits + per-partition lineage/metrics.
+"""Checkpoint store: atomic snapshot commits + per-file lineage/metrics.
 
 Generalizes the reference's per-stage CSV artifacts + DuckDB run bookkeeping
 (``data_pipeline/main.py:148-161``, ``db/pipeline_db.py:140-149, 441-460``)
 into a table-format contract:
 
-  {warehouse}/{stage}/snap-{fingerprint}/data/*.parquet   -- stage output
-  {warehouse}/{stage}/snap-{fingerprint}/manifest.parquet -- per-file lineage
+  {warehouse}/{stage}/snap-{snapshot_id}/data/*.parquet   -- stage output
+  {warehouse}/{stage}/snap-{snapshot_id}/manifest.parquet -- per-file lineage
   {warehouse}/{stage}/snapshot-log.json                   -- commit record
 
 The snapshot log is the only commit record (the Iceberg metadata-file
-analogue). A commit writes data and manifest into a temp dir, renames it to
-``snap-{fingerprint}``, then appends the log entry by one ``os.replace`` --
+analogue) and every reader follows its live entry's ``path``. A commit takes
+the next log id, writes data and manifest straight into
+``snap-{snapshot_id}``, then appends the log entry by one ``os.replace`` --
 the single commit point. A crash before that replace leaves a dir that no
 live log entry names: it is invisible to ``has_snapshot``, ``read`` and
-``latest_fingerprint``, and the next run recomputes it, so any stage is
-resumable (north_rule). ``fingerprint`` chains the upstream fingerprint +
-stage config, so resume only reuses a snapshot whose entire ancestry matches.
+``latest_fingerprint``, and the next commit of the stage takes the same id
+and overwrites it, so any stage is resumable (north_rule). ``fingerprint``
+chains the upstream fingerprint + stage config, so resume only reuses a
+snapshot whose entire ancestry matches; re-committing a fingerprint expires
+its old entry and deletes the old dir after the replace.
 
-Each log entry carries ``snapshot_id``, ``parent_id``, operation, row count,
-run id and the committed schema (reads pass it to the scan, so no read pays a
-schema-inference job). Old snapshots stay readable (time travel by snapshot
-id or timestamp) until ``expire_snapshots``; ``merge_into`` is a
-copy-on-write MERGE INTO with schema evolution (new source columns are added,
-absent ones preserved). On a cluster with Iceberg the same contract maps onto
+Each log entry carries ``snapshot_id``, ``parent_id``, operation, run id,
+the committed schema (reads pass it to the scan, so no read pays a
+schema-inference job), the row count and key checksum, and the stage's
+measured gate decisions (``gates``: value, threshold, branch taken). Old
+snapshots stay readable (time travel by snapshot id or timestamp) until
+``expire_snapshots``; ``merge_into`` is a copy-on-write MERGE INTO with
+schema evolution (new source columns are added, absent ones preserved). On a
+cluster with Iceberg the same contract maps onto
 ``writeTo(...).createOrReplace()`` commits and the table's ``snapshots`` /
 ``files`` metadata tables.
 
-Lineage rows (one per data file): rows, xxhash64-sum checksum, min/max of the
-stage key — generalizing ``source_stats`` (``pipeline_db.py:145-149``).
+A commit is ONE Spark job, the data write; no statistic re-reads the data.
+The snapshot's ``rows`` and ``checksum`` (order-insensitive sum of
+``pmod(xxhash64(key), 2^31)``) are observed during the write
+(``DataFrame.observe``). The manifest's lineage rows (one per non-empty data
+file: rows, min/max of the stage key -- generalizing ``source_stats``,
+``pipeline_db.py:145-149``) come from the Parquet footers, as Iceberg fills
+its manifests from what the writer knows. A commit whose footer row total
+differs from the observed count raises before the log replace.
 """
 
 from __future__ import annotations
@@ -37,10 +48,27 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+_MANIFEST_SCHEMA = pa.schema(
+    [
+        ("file", pa.string()),
+        ("rows", pa.int64()),
+        ("min_key", pa.string()),
+        ("max_key", pa.string()),
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("fingerprint", pa.string()),
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
 
 
 def chain_fingerprint(*parts: str) -> str:
@@ -73,11 +101,14 @@ class CheckpointStore:
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.warehouse, stage)
 
-    def _snap_dir(self, stage: str, fingerprint: str) -> str:
-        return os.path.join(self._stage_dir(stage), f"snap-{fingerprint}")
-
     def _log_file(self, stage: str) -> str:
         return os.path.join(self._stage_dir(stage), "snapshot-log.json")
+
+    def stages(self) -> list[str]:
+        """Stages with a dir in the warehouse, sorted."""
+        return sorted(
+            d for d in os.listdir(self.warehouse) if os.path.isdir(self._stage_dir(d))
+        )
 
     # -- snapshot log (Iceberg metadata-file analogue) -------------------------
     def snapshots(self, stage: str) -> list[dict]:
@@ -109,39 +140,35 @@ class CheckpointStore:
             "operation string, committed_at string, rows long, run_id string",
         )
 
-    def _append_log(self, stage: str, entry: dict) -> None:
-        entries = self.snapshots(stage)
-        # Re-committing a fingerprint replaces the snapshot dir in place, so
-        # any older log entry with the same fingerprint now points at NEW
-        # data. Mark those entries expired: time travel to the stale id fails
-        # explicitly instead of silently returning the new rows (the "old
-        # snapshots stay readable until expire_snapshots" contract only holds
-        # for snapshots whose data dirs still exist).
-        for e in entries:
-            if e["fingerprint"] == entry["fingerprint"] and not e.get("expired"):
-                e["expired"] = True
-                e["superseded_by"] = entry["snapshot_id"]
-        entries.append(entry)
+    def _save_log(self, stage: str, entries: list[dict]) -> None:
+        """Replace the log (the commit point: single-writer atomic swap, the
+        guarantee Iceberg gets from its catalog CAS), then delete the dirs
+        that only expired entries still name."""
         tmp = self._log_file(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(entries, f, indent=1)
         os.replace(tmp, self._log_file(stage))
+        live = {e["path"] for e in entries if not e.get("expired")}
+        for e in entries:
+            if e.get("expired") and e["path"] not in live and os.path.isdir(e["path"]):
+                shutil.rmtree(e["path"])
 
-    def _live_entry(self, stage: str, fingerprint: str) -> dict | None:
-        """The log entry that commits ``fingerprint``, or None. A re-commit
-        marks every earlier entry of the same fingerprint expired, so the
-        newest one is the only candidate."""
-        for e in reversed(self.snapshots(stage)):
-            if e["fingerprint"] == fingerprint:
+    def live_entry(self, stage: str, fingerprint: str | None = None) -> dict | None:
+        """The log entry that commits ``fingerprint`` (default: the latest),
+        or None. A re-commit marks every earlier entry of the same
+        fingerprint expired, so the newest one is the only candidate."""
+        entries = self.snapshots(stage)
+        fp = fingerprint or (entries[-1]["fingerprint"] if entries else None)
+        for e in reversed(entries):
+            if e["fingerprint"] == fp:
                 return None if e.get("expired") else e
         return None
 
     # -- commit / read -------------------------------------------------------
     def has_snapshot(self, stage: str, fingerprint: str) -> bool:
         """Any live committed snapshot is resumable, not just the latest."""
-        return self._live_entry(stage, fingerprint) is not None and os.path.isdir(
-            os.path.join(self._snap_dir(stage, fingerprint), "data")
-        )
+        entry = self.live_entry(stage, fingerprint)
+        return entry is not None and os.path.isdir(os.path.join(entry["path"], "data"))
 
     def write(
         self,
@@ -150,96 +177,62 @@ class CheckpointStore:
         fingerprint: str,
         key_col: str | None = None,
         operation: str = "replace",
+        gates: dict | None = None,
     ) -> SnapshotInfo:
-        """Write df as a new snapshot; returns after the atomic commit."""
-        snap = self._snap_dir(stage, fingerprint)
-        tmp = snap + f".tmp-{uuid.uuid4().hex[:8]}"
-        data_dir = os.path.join(tmp, "data")
-        df.write.mode("overwrite").parquet(data_dir)
+        """Write df as a new snapshot; returns after the atomic commit. The
+        data write is the commit's only Spark action. ``gates`` maps each
+        gate the stage measured to its ``{"value", "threshold", "branch"}``
+        record for the log entry."""
+        history = self.snapshots(stage)
+        parent = history[-1]["snapshot_id"] if history else None
+        snap_id = (parent or 0) + 1
+        snap = os.path.join(self._stage_dir(stage), f"snap-{snap_id}")
+        data_dir = os.path.join(snap, "data")
+        # the checksum hashes the key column (order-insensitive sum) -- full
+        # row hashing would cost a hash over every wide column per stage
+        key = F.col(key_col) if key_col and key_col in df.columns else F.lit(None)
+        obs = Observation()
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(
+                F.sum(F.pmod(F.xxhash64(key), F.lit(1 << 31))), F.lit(0)
+            ).alias("checksum"),
+        ).write.mode("overwrite").parquet(data_dir)
+        observed = obs.get
 
-        # per-file lineage from the committed bytes (not the logical plan).
-        # The checksum hashes the key column (order-insensitive sum) — full
-        # row hashing would re-read every wide column a second time per stage.
-        written = self.spark.read.schema(df.schema).parquet(data_dir)
-        key = F.col(key_col) if key_col and key_col in written.columns else F.lit(None)
-        # group on the raw file name; the tmp-dir -> final-path rewrite is a
-        # per-FILE string fix applied after aggregation (a regexp_replace
-        # inside the per-row projection costs ~5 us x rows — measured 32
-        # JVM-CPU-seconds on one 6.4M-row commit)
-        import re as _re
-
-        manifest_rows = (
-            written.select(
-                F.input_file_name().alias("file"),
-                key.alias("_k"),
+        files = _footer_lineage(data_dir, key_col)
+        total = sum(f["rows"] for f in files)
+        if total != observed["rows"]:
+            raise RuntimeError(
+                f"stage {stage!r} snapshot {snap_id}: data file footers hold "
+                f"{total} rows but the write observed {observed['rows']}; not committed"
             )
-            .groupBy("file")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
-                    F.sum(F.pmod(F.xxhash64("_k"), F.lit(1 << 31))), F.lit(0)
-                ).alias("checksum"),
-                F.min("_k").cast("string").alias("min_key"),
-                F.max("_k").cast("string").alias("max_key"),
-            )
-            .collect()
-        )
-        _fix = lambda p: _re.sub(r"\.tmp-[0-9a-f]+/", "/", p)  # noqa: E731
-        # one row per data FILE (bounded by task count, ~10^4-10^5 even at
-        # petabyte stages with AQE coalescing) — small enough to land on the
-        # driver, so the manifest is written driver-side with pyarrow instead
-        # of paying a second Spark job + read-back per stage commit
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from datetime import datetime, timezone
-
-        committed_at = datetime.now(timezone.utc)
-        table = pa.table(
-            {
-                "file": [_fix(r["file"]) for r in manifest_rows],
-                "rows": [r["rows"] for r in manifest_rows],
-                "checksum": [r["checksum"] for r in manifest_rows],
-                "min_key": [r["min_key"] for r in manifest_rows],
-                "max_key": [r["max_key"] for r in manifest_rows],
-                "run_id": [self.run_id] * len(manifest_rows),
-                "stage": [stage] * len(manifest_rows),
-                "fingerprint": [fingerprint] * len(manifest_rows),
-                "committed_at": [committed_at] * len(manifest_rows),
-            },
-            schema=pa.schema(
-                [
-                    ("file", pa.string()),
-                    ("rows", pa.int64()),
-                    ("checksum", pa.int64()),
-                    ("min_key", pa.string()),
-                    ("max_key", pa.string()),
-                    ("run_id", pa.string()),
-                    ("stage", pa.string()),
-                    ("fingerprint", pa.string()),
-                    ("committed_at", pa.timestamp("us", tz="UTC")),
-                ]
-            ),
+        commit_meta = {
+            "run_id": self.run_id,
+            "stage": stage,
+            "fingerprint": fingerprint,
+            "committed_at": datetime.now(timezone.utc),
+        }
+        table = pa.Table.from_pylist(
+            [{**f, **commit_meta} for f in files], schema=_MANIFEST_SCHEMA
         )
         # the manifest follows the session codec like the data files; Spark
         # spells "no compression" differently from pyarrow
         codec = self.spark.conf.get("spark.sql.parquet.compression.codec")
         pq.write_table(
             table,
-            os.path.join(tmp, "manifest.parquet"),
+            os.path.join(snap, "manifest.parquet"),
             compression={"uncompressed": "none"}.get(codec, codec),
         )
-        total = sum(r["rows"] for r in manifest_rows)
 
-        if os.path.isdir(snap):
-            shutil.rmtree(snap)
-        os.rename(tmp, snap)
-        # the log append's os.replace is the commit point (single-writer
-        # atomic swap, same guarantee Iceberg gets from its catalog CAS)
-        history = self.snapshots(stage)
-        snap_id = (history[-1]["snapshot_id"] + 1) if history else 1
-        parent = history[-1]["snapshot_id"] if history else None
-        self._append_log(
-            stage,
+        # re-committing a fingerprint expires its older entries, so time
+        # travel to a stale id fails explicitly; _save_log drops their dirs
+        for e in history:
+            if e["fingerprint"] == fingerprint and not e.get("expired"):
+                e["expired"] = True
+                e["superseded_by"] = snap_id
+        history.append(
             {
                 "snapshot_id": snap_id,
                 "parent_id": parent,
@@ -247,25 +240,29 @@ class CheckpointStore:
                 "operation": operation,
                 "committed_at": datetime.now(timezone.utc).isoformat(),
                 "rows": total,
+                "checksum": observed["checksum"],
+                "gates": gates or {},
                 "run_id": self.run_id,
                 "path": snap,
                 "schema": df.schema.json(),
-            },
+            }
         )
+        self._save_log(stage, history)
         return SnapshotInfo(stage, fingerprint, snap, total, snap_id)
 
-    def _read_data(self, snap: str, entry: dict) -> DataFrame:
+    def _read_data(self, entry: dict) -> DataFrame:
         """Scan a snapshot's data files with the schema its log entry
         recorded at commit — no schema-inference job."""
         schema = StructType.fromJson(json.loads(entry["schema"]))
-        return self.spark.read.schema(schema).parquet(os.path.join(snap, "data"))
+        return self.spark.read.schema(schema).parquet(os.path.join(entry["path"], "data"))
 
     def read(self, stage: str, fingerprint: str | None = None) -> DataFrame:
-        fp = fingerprint or self.latest_fingerprint(stage)
-        entry = self._live_entry(stage, fp) if fp else None
+        entry = self.live_entry(stage, fingerprint)
         if entry is None:
-            raise FileNotFoundError(f"stage {stage!r} has no committed snapshot {fp}")
-        return self._read_data(self._snap_dir(stage, fp), entry)
+            raise FileNotFoundError(
+                f"stage {stage!r} has no committed snapshot {fingerprint or ''}"
+            )
+        return self._read_data(entry)
 
     # -- time travel (Iceberg VERSION AS OF / TIMESTAMP AS OF) -----------------
     def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
@@ -280,7 +277,7 @@ class CheckpointStore:
                             else ""
                         )
                     )
-                return self._read_data(e["path"], e)
+                return self._read_data(e)
         raise FileNotFoundError(f"stage {stage!r} has no snapshot {snapshot_id}")
 
     def read_as_of(self, stage: str, timestamp_iso: str) -> DataFrame:
@@ -298,21 +295,16 @@ class CheckpointStore:
 
     def expire_snapshots(self, stage: str, keep_last: int = 2) -> list[int]:
         """Drop data of all but the newest ``keep_last`` snapshots (Iceberg
-        ``expireSnapshots``). The log keeps the full history; expired entries
-        are marked so time travel fails loudly instead of half-reading."""
+        ``expireSnapshots``), and any dir that only expired entries still
+        name. The log keeps the full history; expired entries are marked so
+        time travel fails loudly instead of half-reading."""
         entries = self.snapshots(stage)
         live = [e for e in entries if not e.get("expired")]
         expired_ids = []
-        keep_paths = {e["path"] for e in live[-max(keep_last, 1):]}
         for e in live[:-max(keep_last, 1)]:
-            if e["path"] not in keep_paths and os.path.isdir(e["path"]):
-                shutil.rmtree(e["path"])
             e["expired"] = True
             expired_ids.append(e["snapshot_id"])
-        tmp = self._log_file(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entries, f, indent=1)
-        os.replace(tmp, self._log_file(stage))
+        self._save_log(stage, entries)
         return expired_ids
 
     # -- MERGE INTO (copy-on-write, schema-evolving) ---------------------------
@@ -366,8 +358,7 @@ class CheckpointStore:
 
     def rows(self, stage: str, fingerprint: str | None = None) -> int | None:
         """Committed row count of a snapshot (from its log entry), or None."""
-        fp = fingerprint or self.latest_fingerprint(stage)
-        entry = self._live_entry(stage, fp) if fp else None
+        entry = self.live_entry(stage, fingerprint)
         return entry["rows"] if entry else None
 
     def latest_fingerprint(self, stage: str) -> str | None:
@@ -376,17 +367,37 @@ class CheckpointStore:
         return entries[-1]["fingerprint"] if entries else None
 
     def manifest(self, stage: str | None = None) -> DataFrame:
-        """All lineage rows across committed snapshots (optionally one stage)."""
-        stages = [stage] if stage else [
-            d for d in os.listdir(self.warehouse)
-            if os.path.isdir(self._stage_dir(d))
-        ]
-        paths = []
-        for st in stages:
-            fp = self.latest_fingerprint(st)
-            if fp:
-                paths.append(os.path.join(self._snap_dir(st, fp), "manifest.parquet"))
+        """Lineage rows of the latest snapshot of each stage (or of one)."""
+        entries = [self.live_entry(st) for st in ([stage] if stage else self.stages())]
+        paths = [os.path.join(e["path"], "manifest.parquet") for e in entries if e]
         if not paths:
             raise FileNotFoundError("no committed snapshots")
         return self.spark.read.parquet(*paths)
 
+
+def _footer_lineage(data_dir: str, key_col: str | None) -> list[dict]:
+    """One lineage row per non-empty data file, from its Parquet footer:
+    ``file`` (URI, as ``input_file_name()`` spells it), ``rows``, and the
+    key column's min/max over its row-group statistics, as strings (None
+    without a key or statistics). Keys are integral or string columns, whose
+    ``str`` matches Spark's cast to string."""
+    out = []
+    for name in sorted(os.listdir(data_dir)):
+        if not name.endswith(".parquet"):  # _SUCCESS and .crc side files
+            continue
+        path = os.path.join(data_dir, name)
+        md = pq.read_metadata(path)
+        if md.num_rows == 0:
+            continue
+        leaves = [md.schema.column(j).path for j in range(md.num_columns)]
+        stats = (
+            [md.row_group(i).column(leaves.index(key_col)).statistics
+             for i in range(md.num_row_groups)]
+            if key_col in leaves
+            else []
+        )
+        bounds = [(s.min, s.max) for s in stats if s is not None and s.has_min_max]
+        lo = str(min(b[0] for b in bounds)) if bounds else None
+        hi = str(max(b[1] for b in bounds)) if bounds else None
+        out.append({"file": Path(path).as_uri(), "rows": md.num_rows, "min_key": lo, "max_key": hi})
+    return out

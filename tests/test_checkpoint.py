@@ -4,6 +4,7 @@ import json
 import os
 import shutil
 import tempfile
+import threading
 
 import pyarrow.parquet as pq
 import pytest
@@ -60,7 +61,7 @@ def test_manifest_lineage_covers_all_stages(committed):
     stages = {r["stage"] for r in m.select("stage").distinct().collect()}
     assert stages == set(STAGES)
     cols = set(m.columns)
-    assert {"file", "rows", "checksum", "min_key", "max_key", "run_id", "stage"} <= cols
+    assert {"file", "rows", "min_key", "max_key", "run_id", "stage"} <= cols
     # row counts in the manifest must equal actual stage row counts
     for st in STAGES:
         manifest_rows = (
@@ -101,6 +102,7 @@ def test_expire_snapshots_keeps_latest(spark):
         store.write("tbl", spark.range(i + 1), f"fp{i}", key_col="id")
     expired = store.expire_snapshots("tbl", keep_last=2)
     assert expired == [1, 2]
+    assert not any(os.path.exists(e["path"]) for e in store.snapshots("tbl")[:2])
     # expired versions fail loudly; retained ones still read
     assert store.read_snapshot("tbl", 4).count() == 4
     assert store.read_snapshot("tbl", 3).count() == 3
@@ -135,6 +137,8 @@ def test_recommit_fingerprint_expires_stale_snapshot_ids(spark):
     with _pytest.raises(FileNotFoundError):
         store.read_as_of("tbl", log[0]["committed_at"])
     assert store.read_as_of("tbl", log[1]["committed_at"]).count() == 5
+    # the superseded snapshot's dir went with its entry
+    assert not os.path.exists(log[0]["path"])
     shutil.rmtree(wh)
 
 
@@ -191,7 +195,7 @@ def test_read_uses_logged_schema_without_inference_job(spark, jobs_submitted):
         lambda: (store.read("tbl"), store.read_snapshot("tbl", 1))
     )
     assert jobs == []
-    inferred = spark.read.parquet(os.path.join(store._snap_dir("tbl", "fp1"), "data"))
+    inferred = spark.read.parquet(os.path.join(store.snapshots("tbl")[-1]["path"], "data"))
     assert latest.schema == by_id.schema == inferred.schema
     assert sorted(latest.collect()) == sorted(inferred.collect())
     shutil.rmtree(wh)
@@ -223,14 +227,13 @@ class _CatalogOs:
 
 def test_commit_crash_at_each_step_leaves_previous_snapshot(spark, monkeypatch):
     """The snapshot log's replace is the single commit point: a crash after
-    the data write, at the rename into ``snap-<fp>`` or at the log replace
-    leaves the new fingerprint uncommitted and the latest one unchanged."""
+    the data write or at the log replace leaves the new fingerprint
+    uncommitted and the latest one unchanged."""
     wh = tempfile.mkdtemp(prefix="wh-crash-")
     store = CheckpointStore(spark, wh)
     store.write("tbl", spark.range(3), "fp0", key_col="id")
     crashes = {
         "after data write": (pq, "write_table", _FailOnce(pq.write_table)),
-        "rename into snap": (catalog, "os", _CatalogOs(rename=_FailOnce(os.rename))),
         "log replace": (catalog, "os", _CatalogOs(replace=_FailOnce(os.replace))),
     }
     for step, (target, name, fault) in crashes.items():
@@ -248,6 +251,163 @@ def test_commit_crash_at_each_step_leaves_previous_snapshot(spark, monkeypatch):
     store.write("tbl", spark.range(5), "fp-log-replace", key_col="id")
     assert store.latest_fingerprint("tbl") == "fp-log-replace"
     assert store.read("tbl").count() == 5
+    shutil.rmtree(wh)
+
+
+def test_recommit_crash_at_log_replace_keeps_committed_data(spark, monkeypatch):
+    """A re-commit of a fingerprint writes its own dir, so a crash at its
+    log replace leaves the live entry naming the data it committed."""
+    wh = tempfile.mkdtemp(prefix="wh-recrash-")
+    store = CheckpointStore(spark, wh)
+    store.write("tbl", spark.range(3), "fp", key_col="id")
+    with monkeypatch.context() as m:
+        m.setattr(catalog, "os", _CatalogOs(replace=_FailOnce(os.replace)))
+        with pytest.raises(OSError, match="injected"):
+            store.write("tbl", spark.range(5), "fp", key_col="id")
+    assert store.has_snapshot("tbl", "fp")
+    assert store.read("tbl").count() == 3
+    assert store.rows("tbl") == 3
+    shutil.rmtree(wh)
+
+
+def test_crashed_commits_then_retry_leave_one_snapshot_dir(spark, monkeypatch):
+    """A crashed commit's dir is named by no entry and the next commit of
+    the stage takes the same snapshot id, so it overwrites that dir."""
+    wh = tempfile.mkdtemp(prefix="wh-retry-")
+    store = CheckpointStore(spark, wh)
+    faults = (
+        (pq, "write_table", _FailOnce(pq.write_table)),
+        (catalog, "os", _CatalogOs(replace=_FailOnce(os.replace))),
+    )
+    for target, name, fault in faults:
+        with monkeypatch.context() as m:
+            m.setattr(target, name, fault)
+            with pytest.raises(OSError, match="injected"):
+                store.write("tbl", spark.range(7), "fp", key_col="id")
+    store.write("tbl", spark.range(5), "fp", key_col="id")
+    stage_dir = os.path.join(wh, "tbl")
+    assert [d for d in os.listdir(stage_dir) if d.startswith("snap-")] == ["snap-1"]
+    assert store.read("tbl").count() == 5
+    shutil.rmtree(wh)
+
+
+class _RowsOffByOne:
+    """A Parquet footer whose ``num_rows`` is one more than the file's."""
+
+    def __init__(self, md):
+        self._md, self.num_rows = md, md.num_rows + 1
+
+    def __getattr__(self, name):
+        return getattr(self._md, name)
+
+
+def test_footer_rows_disagreeing_with_observed_rows_commit_nothing(spark, monkeypatch):
+    wh = tempfile.mkdtemp(prefix="wh-footer-")
+    store = CheckpointStore(spark, wh)
+    store.write("tbl", spark.range(3), "fp0", key_col="id")
+    real = pq.read_metadata
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_metadata", lambda path: _RowsOffByOne(real(path)))
+        with pytest.raises(RuntimeError, match="not committed"):
+            store.write("tbl", spark.range(5), "fp1", key_col="id")
+    assert not store.has_snapshot("tbl", "fp1")
+    assert store.latest_fingerprint("tbl") == "fp0" and store.rows("tbl") == 3
+    shutil.rmtree(wh)
+
+
+def test_empty_frames_commit_zero_rows(spark):
+    """``spark.range(0)`` and a ``limit(0)`` frame (the no-edges shape of
+    ``connected_components``) commit 0 rows without waiting forever on the
+    observed metrics."""
+    wh = tempfile.mkdtemp(prefix="wh-empty-")
+    store = CheckpointStore(spark, wh)
+    frames = {"range0": spark.range(0), "limit0": spark.range(5).limit(0)}
+    done = {}
+
+    def commit():
+        for name, df in frames.items():
+            done[name] = store.write(name, df, "fp", key_col="id").rows
+
+    worker = threading.Thread(target=commit, daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive()
+    assert done == {"range0": 0, "limit0": 0}
+    for name in frames:
+        entry = store.live_entry(name)
+        assert (entry["rows"], entry["checksum"]) == (0, 0)
+        assert store.read(name).count() == 0
+    shutil.rmtree(wh)
+
+
+def test_commit_is_one_spark_job(spark, jobs_submitted):
+    """The data write is the commit's only job: statistics are observed
+    during it and the manifest comes from the Parquet footers."""
+    wh = tempfile.mkdtemp(prefix="wh-onejob-")
+    store = CheckpointStore(spark, wh)
+    _info, jobs = jobs_submitted(lambda: store.write("t", spark.range(5), "fp", key_col="id"))
+    assert len(jobs) == 1
+    shutil.rmtree(wh)
+
+
+def test_manifest_matches_input_file_name_reference(spark):
+    """Per file, the footer-built manifest equals a ``groupBy`` over
+    ``input_file_name()`` of the committed files, and the logged checksum
+    is the sum of the reference's per-file checksums. Partition 0 is empty,
+    so the snapshot holds a 0-row file that neither side lists."""
+    wh = tempfile.mkdtemp(prefix="wh-lineage-")
+    store = CheckpointStore(spark, wh)
+    df = spark.range(0, 40, 1, 4).filter("id >= 10").select(
+        "id", F.format_string("k%03d", (F.col("id") * 7) % 40).alias("k")
+    )
+    for key in ("id", "k"):
+        store.write(key, df, "fp", key_col=key)
+        entry = store.live_entry(key)
+        data_dir = os.path.join(entry["path"], "data")
+        assert any(pq.read_metadata(os.path.join(data_dir, f)).num_rows == 0
+                   for f in os.listdir(data_dir) if f.endswith(".parquet"))
+        ref = (
+            spark.read.parquet(data_dir)
+            .groupBy(F.input_file_name().alias("file"))
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.pmod(F.xxhash64(key), F.lit(1 << 31))).alias("checksum"),
+                F.min(key).cast("string").alias("min_key"),
+                F.max(key).cast("string").alias("max_key"),
+            )
+            .collect()
+        )
+        got = {r["file"]: (r["rows"], r["min_key"], r["max_key"]) for r in store.manifest(key).collect()}
+        assert got == {r["file"]: (r["rows"], r["min_key"], r["max_key"]) for r in ref}, key
+        assert entry["rows"] == sum(r["rows"] for r in ref) == 30
+        assert entry["checksum"] == sum(r["checksum"] for r in ref), key
+    shutil.rmtree(wh)
+
+
+def test_edges_entry_records_candidate_pairs_gate(spark, tiny_pages, capsys, monkeypatch):
+    """Above the broadcast limit the edges log entry records the measured
+    candidate count, the limit and the shuffle branch; ``cli manifest``
+    prints the record."""
+    from infoscience_imports_spark import cli
+
+    wh = tempfile.mkdtemp(prefix="wh-gates-")
+    pipe = DedupPipeline(
+        spark, CheckpointStore(spark, wh), DedupConfig(broadcast_pair_limit=0),
+        input_fingerprint="gates",
+    )
+    pipe.run(pipeline_input(tiny_pages), stages=STAGES[:4])
+    gate = pipe.store.live_entry("edges")["gates"]["candidate_pairs"]
+    assert gate == {
+        "value": pipe.metrics["candidate_pairs"],
+        "threshold": 0,
+        "branch": "shuffle",
+    }
+    assert gate["value"] > 0
+    capsys.readouterr()
+    monkeypatch.setattr(cli, "get_spark", lambda **kw: spark)
+    assert cli.main(["manifest", "--warehouse", wh, "--stage", "edges"]) == 0
+    printed = json.loads(capsys.readouterr().out.splitlines()[0])
+    assert printed["gates"] == {"candidate_pairs": gate}
     shutil.rmtree(wh)
 
 

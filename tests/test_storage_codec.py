@@ -201,6 +201,8 @@ def test_tune_scan_splits_leaves_conf_when_size_unknown(spark, monkeypatch):
         spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="wh-tune-")), DedupConfig()
     )
     try:
+        # the split is sized from the live extract snapshot's data dir
+        pipe.store.write("extract", spark.range(1), pipe.fingerprint("extract"))
         monkeypatch.setattr(pipeline_mod, "path_bytes", lambda spark, path: None)
         pipe._tune_scan_splits("signatures")
         assert {k: spark.conf.get(k) for k in keys} == before
