@@ -171,13 +171,12 @@ def cmd_decontaminate(args: argparse.Namespace) -> int:
 def cmd_manifest(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="webdedup-manifest")
     store = CheckpointStore(spark, args.warehouse)
-    # one JSON line per live snapshot (row count, key checksum, gate
-    # decisions), then the per-file lineage table
+    # one JSON line per snapshot the table below lists (row count, key
+    # checksum, gate decisions), then its per-file lineage table
     fields = ("snapshot_id", "fingerprint", "rows", "checksum", "gates")
     for stage in [args.stage] if args.stage else store.stages():
-        for e in store.snapshots(stage):
-            if not e.get("expired"):
-                print(json.dumps({"stage": stage} | {k: e.get(k) for k in fields}))
+        if e := store.live_entry(stage):
+            print(json.dumps({"stage": stage} | {k: e.get(k) for k in fields}))
     store.manifest(args.stage).orderBy("stage", "file").show(100, truncate=False)
     return 0
 

@@ -73,27 +73,12 @@ class DedupPipeline:
         # verify; sym edge count vs cc_local_max_edges decides local-vs-
         # distributed components
         self.metrics: dict[str, int | bool] = {}
-        # stage -> {gate: {"value", "threshold", "branch"}} of the stage being
-        # built, stored in its snapshot-log entry by the commit
-        self._gates: dict[str, dict] = {}
 
     # -- stage fingerprints chain --------------------------------------------
     def fingerprint(self, stage: str) -> str:
         idx = STAGES.index(stage)
         parts = [self.input_fp, self.cfg_fp] + list(STAGES[: idx + 1])
         return chain_fingerprint(*parts)
-
-    def _gate(self, stage: str, name: str, value: int | None) -> str:
-        """Branch of a ``broadcast_pair_limit`` gate on a measured ``value``
-        (unknown -> shuffle), recorded for ``stage``'s commit."""
-        limit = self.cfg.broadcast_pair_limit
-        branch = "broadcast" if value is not None and value <= limit else "shuffle"
-        self._gates.setdefault(stage, {})[name] = {
-            "value": value,
-            "threshold": limit,
-            "branch": branch,
-        }
-        return branch
 
     # -- stage bodies ----------------------------------------------------------
     def _extract(self, pages: DataFrame) -> DataFrame:
@@ -179,7 +164,7 @@ class DedupPipeline:
         keyed = extract_df.withColumn("digest", F.xxhash64("text_norm"))
         mins = keyed.groupBy("digest").agg(F.min("doc_id").alias("rep_id"))
         n_docs = self.store.rows("extract", self.fingerprint("extract"))
-        if self._gate("signatures", "extract_rows", n_docs) == "broadcast":
+        if n_docs is not None and n_docs <= self.cfg.broadcast_pair_limit:
             with_rep = keyed.join(F.broadcast(mins), on="digest")
         else:
             with_rep = keyed.join(mins, on="digest")
@@ -229,9 +214,7 @@ class DedupPipeline:
             n_docs_hint=self.store.rows("signatures", self.fingerprint("signatures")),
         )
         self.metrics["candidate_pairs"] = n_cands
-        self.metrics["verify_broadcast_gated"] = (
-            self._gate("edges", "candidate_pairs", n_cands) == "broadcast"
-        )
+        self.metrics["verify_broadcast_gated"] = n_cands <= self.cfg.broadcast_pair_limit
         return verify.combine_edges(verify.exact_edges(signatures), fuzzy)
 
     def _components(self, edges: DataFrame, extract_df: DataFrame) -> DataFrame:
@@ -300,9 +283,18 @@ class DedupPipeline:
                 t0 = time.monotonic()
                 self._tune_scan_splits(stage)
                 df, key = self._build_stage(stage, pages)
-                info = self.store.write(
-                    stage, df, fp, key_col=key, gates=self._gates.pop(stage, None)
-                )
+                # the edges entry records its measured broadcast gate
+                gates = None
+                if stage == "edges":
+                    gated = self.metrics["verify_broadcast_gated"]
+                    gates = {
+                        "candidate_pairs": {
+                            "value": self.metrics["candidate_pairs"],
+                            "threshold": self.cfg.broadcast_pair_limit,
+                            "branch": "broadcast" if gated else "shuffle",
+                        }
+                    }
+                info = self.store.write(stage, df, fp, key_col=key, gates=gates)
                 # tracked persists (rep_texts, the gated candidate frame,
                 # the containment sketch table) are scoped to the stage
                 # that created them

@@ -93,9 +93,11 @@ class SnapshotInfo:
 class CheckpointStore:
     def __init__(self, spark: SparkSession, warehouse: str, run_id: str | None = None):
         self.spark = spark
-        self.warehouse = warehouse
+        # absolute, so log paths and manifest file URIs do not depend on the
+        # working directory
+        self.warehouse = os.path.abspath(warehouse)
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        os.makedirs(warehouse, exist_ok=True)
+        os.makedirs(self.warehouse, exist_ok=True)
 
     # -- paths ---------------------------------------------------------------
     def _stage_dir(self, stage: str) -> str:

@@ -384,6 +384,24 @@ def test_manifest_matches_input_file_name_reference(spark):
     shutil.rmtree(wh)
 
 
+def test_relative_warehouse_commits_with_input_file_name_uris(spark, monkeypatch):
+    """A warehouse given as a relative path commits: the manifest's file
+    URIs equal ``input_file_name()`` of the committed files."""
+    tmp = tempfile.mkdtemp(prefix="wh-rel-")
+    monkeypatch.chdir(tmp)
+    store = CheckpointStore(spark, "wh")
+    store.write("t", spark.range(0, 10, 1, 2), "fp", key_col="id")
+    entry = store.live_entry("t")
+    assert entry["path"].startswith(tmp) and store.read("t").count() == 10
+    ref = spark.read.parquet(os.path.join(entry["path"], "data")).groupBy(
+        F.input_file_name().alias("file")
+    ).count()
+    assert sorted(r["file"] for r in store.manifest("t").collect()) == sorted(
+        r["file"] for r in ref.collect()
+    )
+    shutil.rmtree(tmp)
+
+
 def test_edges_entry_records_candidate_pairs_gate(spark, tiny_pages, capsys, monkeypatch):
     """Above the broadcast limit the edges log entry records the measured
     candidate count, the limit and the shuffle branch; ``cli manifest``
