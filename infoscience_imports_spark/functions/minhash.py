@@ -29,22 +29,14 @@ _EMPTY_SENTINEL = np.int64((1 << 31) - 1)  # signature value for empty docs
 
 
 def minhash_signature(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """int64[num_perms] signature of one shingle set (uint64 values)."""
+    """int64[num_perms] signature of one shingle set (uint64 values).
+
+    A whole-batch ``np.minimum.reduceat`` variant ran 8-24x slower in
+    round 6, so callers loop over docs with this per-doc kernel.
+    """
     if shingles.size == 0:
         return np.full(a.shape[0], _EMPTY_SENTINEL, dtype=np.int64)
     # (P, m) matrix; uint64 wrap-around multiply-add, keep top 32 bits
     hv = (a[:, None] * shingles[None, :] + b[:, None]) >> np.uint64(32)
     return hv.min(axis=1).astype(np.int64)
 
-
-def minhash_batch(shingle_sets: list[np.ndarray], cfg: DedupConfig = DEFAULT_CONFIG) -> list[np.ndarray]:
-    """Signatures for a batch of shingle sets (used inside the Arrow UDF).
-
-    Deliberately a per-doc loop: a whole-batch concatenate +
-    ``np.minimum.reduceat`` variant was benchmarked in round 6 and ran
-    8-24x SLOWER (reduceat's segment loop is a generalized-ufunc inner
-    loop, far off the per-doc matmul-min's memory bandwidth) — the per-doc
-    kernel is the fast form at both short and long doc lengths.
-    """
-    a, b = perm_params(cfg)
-    return [minhash_signature(s, a, b) for s in shingle_sets]

@@ -38,7 +38,6 @@ from ..config import DedupConfig, DEFAULT_CONFIG
 from ..functions.minhash import perm_params, minhash_signature
 from ..functions.shingles import shingle_hashes, token_hashes
 from ..functions.simhash import simhash64
-from ..functions.text import normalize_text_col
 
 SIGNATURE_FIELDS = [
     StructField("doc_id", LongType(), False),
@@ -173,7 +172,3 @@ def compute_signatures(
 
     return src.mapInPandas(kernel, schema=out_schema)
 
-
-def with_normalized_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the frozen normalization kernel output as ``text_norm``."""
-    return df.withColumn("text_norm", normalize_text_col(F.col(text_col)))

@@ -27,26 +27,6 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine_col(a, b):
-    """Cosine similarity of two array<float|double> columns, in double.
-
-    Summation is sequential in array order in both Spark's ``aggregate`` and
-    reference engines' list functions — results are bit-stable for the
-    oracle comparison.
-    """
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _cosine_pandas_udf():
     """Arrow-vectorized cosine, bit-identical to the JVM fold / SQL engines.
 
@@ -72,13 +52,6 @@ def _cosine_pandas_udf():
         return pd.Series(dots / (na * nb))
 
     return cos
-
-
-def unit_vec(a):
-    """Vector divided by its L2 norm (one pass per row, done once — pair
-    scoring then needs only a dot product instead of dot + two norms)."""
-    n = _norm(a)
-    return F.transform(a, lambda x: x.cast("double") / n)
 
 
 def cosine_topk(

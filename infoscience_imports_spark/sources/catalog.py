@@ -121,27 +121,6 @@ class CheckpointStore:
         with open(log) as f:
             return json.load(f)
 
-    def snapshot_log(self, stage: str) -> DataFrame:
-        entries = self.snapshots(stage)
-        if not entries:
-            raise FileNotFoundError(f"no committed snapshots for stage {stage!r}")
-        return self.spark.createDataFrame(
-            [
-                (
-                    e["snapshot_id"],
-                    e.get("parent_id"),
-                    e["fingerprint"],
-                    e["operation"],
-                    e["committed_at"],
-                    e["rows"],
-                    e["run_id"],
-                )
-                for e in entries
-            ],
-            "snapshot_id long, parent_id long, fingerprint string, "
-            "operation string, committed_at string, rows long, run_id string",
-        )
-
     def _save_log(self, stage: str, entries: list[dict]) -> None:
         """Replace the log (the commit point: single-writer atomic swap, the
         guarantee Iceberg gets from its catalog CAS), then delete the dirs
@@ -283,11 +262,20 @@ class CheckpointStore:
         raise FileNotFoundError(f"stage {stage!r} has no snapshot {snapshot_id}")
 
     def read_as_of(self, stage: str, timestamp_iso: str) -> DataFrame:
-        """Latest live snapshot committed at or before ``timestamp_iso``."""
+        """Latest live snapshot committed at or before ``timestamp_iso``.
+
+        Times compare as instants, not as text; a time without an offset is
+        UTC, the session time zone."""
+
+        def instant(iso: str) -> datetime:
+            t = datetime.fromisoformat(iso)
+            return t if t.tzinfo else t.replace(tzinfo=timezone.utc)
+
+        as_of = instant(timestamp_iso)
         eligible = [
             e
             for e in self.snapshots(stage)
-            if e["committed_at"] <= timestamp_iso and not e.get("expired")
+            if instant(e["committed_at"]) <= as_of and not e.get("expired")
         ]
         if not eligible:
             raise FileNotFoundError(

@@ -92,6 +92,16 @@ def test_snapshot_log_and_time_travel(spark):
     assert {r["v"] for r in store.read("tbl").collect()} == {"a2", "c"}
     # resumability accepts any committed fingerprint, not just the latest
     assert store.has_snapshot("tbl", "fp1") and store.has_snapshot("tbl", "fp2")
+    # read_as_of compares instants, however the caller writes the time
+    log[0]["committed_at"] = "2026-10-19T18:25:00.123456+00:00"
+    log[1]["committed_at"] = "2026-10-19T19:25:00+00:00"
+    store._save_log("tbl", log)
+    for before in ("2026-10-19T18:25:00Z", "2026-10-19T19:00:00+02:00"):
+        with pytest.raises(FileNotFoundError):
+            store.read_as_of("tbl", before)
+    # a naive time is UTC, the session time zone
+    as_of = store.read_as_of("tbl", "2026-10-19 18:30:00")
+    assert {r["v"] for r in as_of.collect()} == {"a", "b"}
     shutil.rmtree(wh)
 
 
