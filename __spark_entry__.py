@@ -16,11 +16,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from infoscience_imports_spark import caching as _pkg_caching
+from infoscience_imports_spark.caching import persist_tracked, release_all
 from infoscience_imports_spark.config import DedupConfig
 from infoscience_imports_spark.functions.text import normalize_text_col
 from infoscience_imports_spark.operators import lsh, signatures as sigs, verify
 from infoscience_imports_spark.operators.components import attach_clusters, connected_components
+from infoscience_imports_spark.operators.decontaminate import contamination_report, shingle_frame
 from infoscience_imports_spark.operators.family import aggregate_families
 from infoscience_imports_spark.operators.upsert import upsert
 from infoscience_imports_spark.session import path_bytes
@@ -52,17 +53,10 @@ CFG = DedupConfig()
 # ---------------------------------------------------------------------------
 
 # Query helpers cache frames that feed multiple consumers (signature frames,
-# shingle tables). In a long-lived session running many queries those caches
-# would accumulate (round-3 verdict: cache leak at the jaccard/containment
-# helpers), so every cache goes through this registry and the harness calls
-# ``release_caches()`` between queries. Unpersist is lazy-blocking=False:
-# freeing is best-effort bookkeeping, not on the query's critical path.
-def _cached(df: DataFrame) -> DataFrame:
-    # delegates to the package registry (one registry, one drain point);
-    # its MEMORY_AND_DISK default is what .cache() gave these frames before
-    return _pkg_caching.persist_tracked(df)
-
-
+# shingle tables) with ``caching.persist_tracked``. In a long-lived session
+# running many queries those caches would accumulate (round-3 verdict: cache
+# leak at the jaccard/containment helpers), so the harness calls
+# ``release_caches()`` between queries.
 def release_caches() -> None:
     """Unpersist every frame a ``queries()`` callable cached so far.
 
@@ -72,7 +66,7 @@ def release_caches() -> None:
     (query helpers and operator-internal candidate-gate / posting-table
     persists all register there).
     """
-    _pkg_caching.release_all()
+    release_all()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -120,51 +114,15 @@ def _doc_norm(docs: DataFrame) -> DataFrame:
 
 
 def _doc_shingles_hashed(spark, sf_dir):
-    """(doc_id, shs: sorted-unique int64 shingle hashes, n) — Arrow kernel.
-
-    Same doc set and set sizes as :func:`_doc_shingles` (docs with >= 5
-    normalized tokens; distinct 5-grams), but built with the frozen shingle
-    hash kernels (functions/shingles.py) inside ``mapInPandas``: the
-    interpreted higher-order Column form (regex + split + sequence + slice +
-    concat per row) measured ~12 s per evaluation over 5k docs ON ONE CORE
-    (one parquet file = one scan split = one task), while the kernel runs on
-    all cores and hashes each unique token once per batch. Downstream
-    Jaccard on the hash SETS equals Jaccard on the string sets (injective
-    modulo 2^-63 collisions — same accepted risk as the posting join keys).
-    """
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
-
-    from infoscience_imports_spark.functions.shingles import shingle_hashes, token_hashes
-    from infoscience_imports_spark.functions.text import normalize_text_py
-
+    """(doc_id, shs: sorted-unique int64 5-gram hashes, n) over documents,
+    from the shared Arrow shingle kernel (docs with < 5 normalized tokens
+    emit no row). The interpreted higher-order Column form (regex + split +
+    sequence + slice + concat per row) measured ~12 s per evaluation over 5k
+    docs on one core; the kernel runs on all cores. Downstream Jaccard on
+    the hash SETS equals Jaccard on the string sets (injective modulo 2^-63
+    collisions — same accepted risk as the posting join keys)."""
     # one small parquet file would otherwise pin the kernel to one task
-    docs = _t_par(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("shs", ArrayType(LongType(), False), False),
-            StructField("n", IntegerType(), False),
-        ]
-    )
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        memo: dict[str, int] = {}
-        for pdf in batches:
-            ids, arrs, ns = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = normalize_text_py(text if isinstance(text, str) else "").split()
-                if len(toks) < 5:
-                    continue  # oracle contract: <5-token docs emit no 5-grams
-                sh = shingle_hashes(token_hashes(toks, memo), 5)
-                ids.append(int(doc_id))
-                arrs.append(sh.astype(np.int64))
-                ns.append(int(sh.size))
-            yield pd.DataFrame({"doc_id": ids, "shs": arrs, "n": ns})
-
-    return docs.mapInPandas(kernel, schema=schema)
+    return shingle_frame(_t_par(spark, sf_dir, "documents"), n=5)
 
 
 def _bruteforce_jaccard_pairs(spark, sf_dir, threshold=0.70):
@@ -185,7 +143,7 @@ def _bruteforce_jaccard_pairs(spark, sf_dir, threshold=0.70):
     superset of the answer; a length filter (min >= t*max) prunes further,
     and the exact Jaccard on the full hash arrays (JVM array_intersect)
     removes false candidates."""
-    hs = _cached(_doc_shingles_hashed(spark, sf_dir))
+    hs = persist_tracked(_doc_shingles_hashed(spark, sf_dir))
     postings = hs.select("doc_id", "n", F.explode("shs").alias("s"))
     freq = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("s").asc())
@@ -340,9 +298,7 @@ def q_decontaminate_docs(spark, sf_dir):
     measured-gated and broadcast, so the corpus side is never shuffled —
     the only exchange carries the hit rows. Threshold is exact integer
     arithmetic (hits*2 >= probe_n), mirrored verbatim in the oracle."""
-    from infoscience_imports_spark.operators.decontaminate import contamination_report
-
-    hs = _cached(_doc_shingles_hashed(spark, sf_dir))
+    hs = persist_tracked(_doc_shingles_hashed(spark, sf_dir))
     probes = hs.filter(F.pmod(F.col("doc_id"), F.lit(37)) == 0).select(
         F.col("doc_id").alias("probe_id"), "shs", "n"
     )
@@ -359,7 +315,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     # cached: the signature frame feeds candidate generation AND both sides
     # of the shingle verify join — uncached, the Arrow kernel re-runs per
     # consumer (~0.6 s each at sf0.1)
-    sg = _cached(sigs.compute_signatures(docs, CFG, text_col="text_norm", id_col="doc_id"))
+    sg = persist_tracked(sigs.compute_signatures(docs, CFG, text_col="text_norm", id_col="doc_id"))
     pairs = lsh.candidate_pairs(lsh.band_buckets(sg, CFG), CFG)
     return verify.jaccard_verify(pairs, sg, CFG).select(
         "id1", "id2", F.round("jaccard", 6).alias("jaccard")
@@ -390,7 +346,7 @@ def q_dedup_simhash_title(spark, sf_dir):
     # cached: the signature frame feeds the banding probe job, the gated
     # candidate count AND both sides of hamming_edges — uncached, the Arrow
     # kernel re-ran once per consumer (measured ~1.2 s each at sf1.0)
-    sg = _cached(
+    sg = persist_tracked(
         sigs.compute_signatures(
             docs, CFG, text_col="text_norm", id_col="doc_id", include_shingles=False
         )
@@ -421,7 +377,7 @@ def q_containment_substring(spark, sf_dir):
     from infoscience_imports_spark.operators.containment import containment_candidates
 
     cfg = replace(CFG, containment_threshold=1.0)
-    docs = _cached(_doc_norm(_t_par(spark, sf_dir, "documents")))
+    docs = persist_tracked(_doc_norm(_t_par(spark, sf_dir, "documents")))
     sg = sigs.compute_signatures(
         docs, cfg, text_col="text_norm", id_col="doc_id", include_shingles=False
     )

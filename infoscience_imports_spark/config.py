@@ -45,6 +45,9 @@ class DedupConfig:
     salt_buckets: int = 16        # salt fan-out for hot buckets / hot labels
 
     # --- execution ---
+    # read by no operator: shuffle width is the session's
+    # spark.sql.shuffle.partitions. Kept because callers pass it; left out
+    # of stage fingerprints, so a resume at another width reuses snapshots
     shuffle_partitions: int = 32
     max_cc_iterations: int = 50   # guard: >= ceil(log2(diameter)) for any real graph
     # components fast path: measured symmetrized-edge count under which the

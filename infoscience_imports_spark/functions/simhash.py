@@ -30,13 +30,3 @@ def simhash64(tok_hashes: np.ndarray) -> int:
 def hamming64(x: int, y: int) -> int:
     return bin((x ^ y) & ((1 << 64) - 1)).count("1")
 
-
-def simhash_bands(fp: int, n_bands: int = 4) -> list[int]:
-    """Split a 64-bit fingerprint into n contiguous bands (pigeonhole lookup).
-
-    With radius <= n_bands - 1 bit flips, at least one band is untouched, so
-    grouping on (band_idx, band_value) finds every pair within the radius.
-    """
-    w = 64 // n_bands
-    mask = (1 << w) - 1
-    return [(fp >> (w * i)) & mask for i in range(n_bands)]

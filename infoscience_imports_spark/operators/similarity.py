@@ -13,6 +13,8 @@ plan (bucket equi-join) is the one that survives scale-up.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from pyspark.sql import DataFrame, Window
@@ -69,21 +71,38 @@ def cosine_topk(
     vectors) to stay bit-identical with reference engines' list_cosine — the
     oracle-parity contract. The hot path for scale is ann_signlsh_topk.
     """
-    cos = _cosine_pandas_udf()
     q = queries.select(F.col(id_q).alias("query_id"), F.col(vec_q).alias("_qv"))
     c = corpus.select(F.col(id_c).alias("neighbor_id"), F.col(vec_c).alias("_cv"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cos(F.col("_qv"), F.col("_cv")))
+    return _rerank_topk(q, c, k).drop("sim")
+
+
+def _rerank_topk(q: DataFrame, c: DataFrame, k: int, key: str | None = None) -> DataFrame:
+    """The exact verify every top-k operator ends in: ``(query_id, _qv)``
+    probes against ``(neighbor_id, _cv)`` candidates, equi-joined on ``key``
+    (a cross join when None) with the probe side broadcast, self-matches
+    dropped, each pair scored with the sequential-order cosine, and the
+    top ``k`` per query kept by ``(sim desc, neighbor_id asc)``. Returns
+    ``(query_id, neighbor_id, rank, sim)`` with ``sim`` rounded to 6 places.
+
+    The probe side is small by the ANN contract; without the hint Catalyst's
+    size estimate can flip to broadcasting the corpus side, which OOMs at
+    web scale."""
+    cos = _cosine_pandas_udf()
+    pairs = F.broadcast(q).crossJoin(c) if key is None else F.broadcast(q).join(c, on=key)
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+        "sim", cos(F.col("_qv"), F.col("_cv"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
     )
+
+
+def _unit(x: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (a zero row stays zero)."""
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
 
 
 def _auto_n_blocks(n_rows: int, dim: int, chunk_budget_bytes: int, min_blocks: int = 8) -> int:
@@ -450,8 +469,6 @@ def ivf_n_cells(n_rows: int, floor_cells: int = 16, cap_cells: int = 4096) -> in
     doubles = 2 MB); past it, grow a second quantizer level (IVF-in-IVF)
     rather than the flat center list.
     """
-    import math
-
     return max(floor_cells, min(cap_cells, math.isqrt(max(1, n_rows))))
 
 
@@ -500,10 +517,16 @@ def ann_ivf_topk(
         centers = kmeans_refine_centers(
             corpus, centers, id_c=id_c, vec=vec, iters=kmeans_iters
         )
-    cos = _cosine_pandas_udf()
-    assign1 = ivf_assign_udf(centers, nprobe=1)
-    assignp = ivf_assign_udf(centers, nprobe=nprobe)
+    assign1, assignp = ivf_assign_udf(centers, nprobe=1), ivf_assign_udf(centers, nprobe=nprobe)
+    return _cell_topk(queries, corpus, k, assign1, assignp, id_q, id_c, vec)
 
+
+def _cell_topk(
+    queries: DataFrame, corpus: DataFrame, k: int, assign1, assignp, id_q: str, id_c: str, vec: str
+) -> DataFrame:
+    """IVF candidate join + exact re-rank: each corpus vector carries its
+    nearest cell (``assign1``'s first cell id), each query explodes to the
+    cells it probes (``assignp``), and the two meet on ``cell``."""
     c = corpus.select(
         F.col(id_c).alias("neighbor_id"),
         F.col(vec).alias("_cv"),
@@ -514,17 +537,7 @@ def ann_ivf_topk(
         F.col(vec).alias("_qv"),
         F.explode(assignp(F.col(vec))).alias("cell"),
     )
-    scored = (
-        F.broadcast(q).join(c, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cos(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _rerank_topk(q, c, k, key="cell")
 
 
 def _ivf_exemplars(
@@ -567,16 +580,20 @@ def kmeans_refine_centers(
     n_cells = init_centers.shape[0]
     m = min(n_cells * sample_per_cell, max_sample)
     sample = _ivf_exemplars(corpus, m, id_c, vec)
-    s = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    c = init_centers / np.maximum(
-        np.linalg.norm(init_centers, axis=1, keepdims=True), 1e-12
-    )
+    return _spherical_kmeans(_unit(sample), _unit(init_centers), iters)
+
+
+def _spherical_kmeans(points: np.ndarray, centers: np.ndarray, iters: int) -> np.ndarray:
+    """``iters`` Lloyd steps of spherical k-means over unit ``points`` from
+    unit ``centers``: assignment = argmax cosine (first max on ties, so
+    deterministic); update = normalized member mean; an empty cell keeps
+    its previous center."""
+    c = centers
     for _ in range(max(0, iters)):
-        sims = s @ c.T                      # (m, n_cells)
-        assign = np.argmax(sims, axis=1)    # first max -> deterministic ties
+        assign = np.argmax(points @ c.T, axis=1)
         nxt = c.copy()
         for j in np.unique(assign):
-            mean = s[assign == j].mean(axis=0)
+            mean = points[assign == j].mean(axis=0)
             norm = np.linalg.norm(mean)
             if norm > 1e-12:
                 nxt[j] = mean / norm
@@ -604,9 +621,7 @@ def ivf2_assign_udf(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    l1 = l1_centers / np.maximum(
-        np.linalg.norm(l1_centers, axis=1, keepdims=True), 1e-12
-    )
+    l1 = _unit(l1_centers)
     l2 = l2_centers.astype(np.float64)
     l2n = np.maximum(np.sqrt((l2 * l2).sum(axis=1)), 1e-12)
     owner = np.asarray(l2_to_l1, dtype=np.int64)
@@ -665,70 +680,34 @@ def ann_ivf2_topk(
     cells; each level-2 center belongs to its nearest level-1 cell.
     Assignment and probing both pay O(sqrt(n_cells)) per vector.
 
-    Candidate join and exact re-rank are identical to :func:`ann_ivf_topk`
-    — only the cell-id kernel changes, so the 100-TB plan shape (narrow int
-    column, broadcast probe side, windowed top-k) is preserved.
+    Candidate join and exact re-rank are :func:`ann_ivf_topk`'s (one
+    ``_cell_topk``); only the cell-id kernel changes, so the 100-TB plan
+    shape (narrow int column, broadcast probe side, windowed top-k) is
+    preserved.
     ``max_collect_cells`` bounds the driver collect of level-2 centers
     (65536 x dim=64 doubles = 32 MB); past it the center table itself must
     stay distributed (level-2 assignment becomes a join + per-l1-group
     applyInPandas) — raised explicitly rather than collected blindly.
     """
     if n_cells is None:
-        n = corpus.count()
-        import math
-
-        n_cells = max(16, math.isqrt(max(1, n)))
+        n_cells = max(16, math.isqrt(max(1, corpus.count())))
     if n_cells > max_collect_cells:
         raise ValueError(
             f"n_cells={n_cells} > max_collect_cells={max_collect_cells}: "
             "keep the level-2 center table distributed at this scale "
             "(join + per-l1-group applyInPandas) instead of collecting it"
         )
-    import math
-
     if l1_cells is None:
         l1_cells = max(4, math.isqrt(n_cells))
     l2 = _ivf_exemplars(corpus, n_cells, id_c, vec)
-    l2u = l2 / np.maximum(np.linalg.norm(l2, axis=1, keepdims=True), 1e-12)
+    l2u = _unit(l2)
     # level-1 = spherical k-means over the level-2 centers (pure numpy on a
     # (n_cells, dim) array; init = first l1_cells by the same LCG order)
-    c1 = l2u[:l1_cells].copy()
-    for _ in range(8):
-        assign = np.argmax(l2u @ c1.T, axis=1)
-        nxt = c1.copy()
-        for j in np.unique(assign):
-            mean = l2u[assign == j].mean(axis=0)
-            norm = np.linalg.norm(mean)
-            if norm > 1e-12:
-                nxt[j] = mean / norm
-        c1 = nxt
+    c1 = _spherical_kmeans(l2u, l2u[:l1_cells].copy(), 8)
     l2_to_l1 = np.argmax(l2u @ c1.T, axis=1)
-
-    cos = _cosine_pandas_udf()
     assign1 = ivf2_assign_udf(c1, l2, l2_to_l1, nprobe_l1=1, nprobe=1)
     assignp = ivf2_assign_udf(c1, l2, l2_to_l1, nprobe_l1=nprobe_l1, nprobe=nprobe)
-
-    c = corpus.select(
-        F.col(id_c).alias("neighbor_id"),
-        F.col(vec).alias("_cv"),
-        F.element_at(assign1(F.col(vec)), 1).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_q).alias("query_id"),
-        F.col(vec).alias("_qv"),
-        F.explode(assignp(F.col(vec))).alias("cell"),
-    )
-    scored = (
-        F.broadcast(q).join(c, on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cos(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _cell_topk(queries, corpus, k, assign1, assignp, id_q, id_c, vec)
 
 
 def probe_masks(bits: int, radius: int) -> list[int]:
@@ -771,7 +750,6 @@ def ann_signlsh_topk(
     pattern measured ~100x slower elsewhere.
     """
     planes = hyperplanes(dim, bits, seed)
-    cos = _cosine_pandas_udf()
     masks = probe_masks(bits, probe_radius)
     q0 = queries.select(
         F.col(id_q).alias("query_id"),
@@ -790,18 +768,6 @@ def ann_signlsh_topk(
         F.col(vec).alias("_cv"),
         corpus_bucket(F.col(vec)).alias("bucket"),
     )
-    # broadcast the PROBE side (|queries| x C(bits, <=radius) rows — small by
-    # the ANN contract) so the corpus streams through the join; without the
-    # hint Catalyst's size estimate flips to broadcasting the corpus-with-
-    # buckets relation, which OOMs at web scale
-    scored = (
-        F.broadcast(q).join(c, on="bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cos(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    # the probe side is |queries| x C(bits, <=radius) rows, small by the ANN
+    # contract, so the corpus streams through the join
+    return _rerank_topk(q, c, k, key="bucket")

@@ -66,7 +66,9 @@ class DedupPipeline:
         self.spark = spark
         self.store = store
         self.cfg = cfg
-        self.cfg_fp = chain_fingerprint(repr(sorted(cfg.to_dict().items())))
+        # shuffle_partitions shapes no output (see DedupConfig)
+        fp_cfg = {k: v for k, v in cfg.to_dict().items() if k != "shuffle_partitions"}
+        self.cfg_fp = chain_fingerprint(repr(sorted(fp_cfg.items())))
         self.input_fp = input_fingerprint
         # measured gate inputs of the last run (soak/scale evidence):
         # candidate_pairs vs broadcast_pair_limit decides broadcast-vs-shuffle
@@ -251,7 +253,11 @@ class DedupPipeline:
         if src is None:
             return
         entry = self.store.live_entry(src, self.fingerprint(src))
-        total = path_bytes(self.spark, os.path.join(entry["path"], "data")) if entry else None
+        total = (
+            path_bytes(self.spark, os.path.join(self.store.snapshot_dir(src, entry), "data"))
+            if entry
+            else None
+        )
         if total is None:
             return
         par = self.spark.sparkContext.defaultParallelism

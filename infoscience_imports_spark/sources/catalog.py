@@ -9,7 +9,8 @@ into a table-format contract:
   {warehouse}/{stage}/snapshot-log.json                   -- commit record
 
 The snapshot log is the only commit record (the Iceberg metadata-file
-analogue) and every reader follows its live entry's ``path``. A commit takes
+analogue) and every reader follows its live entry's ``path`` (by dir name,
+under this store's stage dir: ``snapshot_dir``). A commit takes
 the next log id, writes data and manifest straight into
 ``snap-{snapshot_id}``, then appends the log entry by one ``os.replace`` --
 the single commit point. A crash before that replace leaves a dir that no
@@ -106,6 +107,13 @@ class CheckpointStore:
     def _log_file(self, stage: str) -> str:
         return os.path.join(self._stage_dir(stage), "snapshot-log.json")
 
+    def snapshot_dir(self, stage: str, entry: dict) -> str:
+        """The dir of a log entry's snapshot under THIS store's stage dir.
+        The entry's ``path`` is absolute as committed; only its name is
+        followed, so a copied or moved warehouse reads (and expires) its own
+        files, never the original's."""
+        return os.path.join(self._stage_dir(stage), os.path.basename(entry["path"]))
+
     def stages(self) -> list[str]:
         """Stages with a dir in the warehouse, sorted."""
         return sorted(
@@ -129,10 +137,11 @@ class CheckpointStore:
         with open(tmp, "w") as f:
             json.dump(entries, f, indent=1)
         os.replace(tmp, self._log_file(stage))
-        live = {e["path"] for e in entries if not e.get("expired")}
+        live = {self.snapshot_dir(stage, e) for e in entries if not e.get("expired")}
         for e in entries:
-            if e.get("expired") and e["path"] not in live and os.path.isdir(e["path"]):
-                shutil.rmtree(e["path"])
+            d = self.snapshot_dir(stage, e)
+            if e.get("expired") and d not in live and os.path.isdir(d):
+                shutil.rmtree(d)
 
     def live_entry(self, stage: str, fingerprint: str | None = None) -> dict | None:
         """The log entry that commits ``fingerprint`` (default: the latest),
@@ -149,7 +158,9 @@ class CheckpointStore:
     def has_snapshot(self, stage: str, fingerprint: str) -> bool:
         """Any live committed snapshot is resumable, not just the latest."""
         entry = self.live_entry(stage, fingerprint)
-        return entry is not None and os.path.isdir(os.path.join(entry["path"], "data"))
+        return entry is not None and os.path.isdir(
+            os.path.join(self.snapshot_dir(stage, entry), "data")
+        )
 
     def write(
         self,
@@ -231,11 +242,13 @@ class CheckpointStore:
         self._save_log(stage, history)
         return SnapshotInfo(stage, fingerprint, snap, total, snap_id)
 
-    def _read_data(self, entry: dict) -> DataFrame:
+    def _read_data(self, stage: str, entry: dict) -> DataFrame:
         """Scan a snapshot's data files with the schema its log entry
         recorded at commit — no schema-inference job."""
         schema = StructType.fromJson(json.loads(entry["schema"]))
-        return self.spark.read.schema(schema).parquet(os.path.join(entry["path"], "data"))
+        return self.spark.read.schema(schema).parquet(
+            os.path.join(self.snapshot_dir(stage, entry), "data")
+        )
 
     def read(self, stage: str, fingerprint: str | None = None) -> DataFrame:
         entry = self.live_entry(stage, fingerprint)
@@ -243,7 +256,7 @@ class CheckpointStore:
             raise FileNotFoundError(
                 f"stage {stage!r} has no committed snapshot {fingerprint or ''}"
             )
-        return self._read_data(entry)
+        return self._read_data(stage, entry)
 
     # -- time travel (Iceberg VERSION AS OF / TIMESTAMP AS OF) -----------------
     def read_snapshot(self, stage: str, snapshot_id: int) -> DataFrame:
@@ -258,7 +271,7 @@ class CheckpointStore:
                             else ""
                         )
                     )
-                return self._read_data(e)
+                return self._read_data(stage, e)
         raise FileNotFoundError(f"stage {stage!r} has no snapshot {snapshot_id}")
 
     def read_as_of(self, stage: str, timestamp_iso: str) -> DataFrame:
@@ -358,8 +371,11 @@ class CheckpointStore:
 
     def manifest(self, stage: str | None = None) -> DataFrame:
         """Lineage rows of the latest snapshot of each stage (or of one)."""
-        entries = [self.live_entry(st) for st in ([stage] if stage else self.stages())]
-        paths = [os.path.join(e["path"], "manifest.parquet") for e in entries if e]
+        paths = [
+            os.path.join(self.snapshot_dir(st, e), "manifest.parquet")
+            for st in ([stage] if stage else self.stages())
+            if (e := self.live_entry(st))
+        ]
         if not paths:
             raise FileNotFoundError("no committed snapshots")
         return self.spark.read.parquet(*paths)

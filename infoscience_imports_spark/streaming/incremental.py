@@ -712,8 +712,10 @@ class IncrementalNearDedup(IncrementalDedup):
         the component-min id) — same contract as the reference's re-run.
         Idempotent: a second pass with no new edges rewrites nothing (and
         since round 5, proves that with one cheap pruned-scan probe instead
-        of a full CC). Returns metrics (docs, edges, clusters before/after,
-        merged count, cc_mode, touched_parts, stage timings).
+        of a full CC). Returns one metrics record (docs, edges, clusters
+        before/after, merged count, deep_scope, scope_docs, cc_mode,
+        touched_parts, deep_gen_s and cc_rewrite_s timings) with the same keys
+        on every path; a value the pass did not reach is None.
         """
         try:
             return self._compact_inner(deep, full_deep, count_clusters, full_cc)
@@ -735,13 +737,24 @@ class IncrementalNearDedup(IncrementalDedup):
         from ..operators.components import connected_components
 
         self._recover_cluster_swap()
+        # the one result record of every path; what a pass does not reach
+        # stays None
+        res = dict.fromkeys(
+            (
+                "docs", "edges", "clusters_before", "clusters_after", "merged",
+                "deep_scope", "deep_gen_s", "scope_docs", "cc_mode",
+                "touched_parts", "cc_rewrite_s",
+            )
+        )
         if not os.path.isdir(self.cluster_dir):
-            return {"docs": 0, "edges": 0, "clusters_before": 0, "clusters_after": 0, "merged": 0}
+            res.update(docs=0, edges=0, clusters_before=0, clusters_after=0, merged=0)
+            return res
         clusters = self.spark.read.parquet(self.cluster_dir)
-        n_docs = clusters.count()
+        res["docs"] = clusters.count()
         cc_epoch = self._cc_epoch()
         epoch_hi = (cc_epoch or 0) + 1
         scoped = cc_epoch is not None and not full_cc
+        res["cc_mode"] = "scoped" if scoped else "full"
         new_frames: list[DataFrame] = []
         n_edges = 0
         if os.path.isdir(self.edge_dir):
@@ -753,23 +766,21 @@ class IncrementalNearDedup(IncrementalDedup):
                     # every already-reflected file (Iceberg: metadata prune)
                     stored = stored.filter(F.col("epoch") > F.lit(cc_epoch))
                 new_frames.append(stored.select("id1", "id2"))
-        deep_scope = "none"
+        res.update(edges=n_edges, deep_scope="none", deep_gen_s=0.0)
         next_wm = None
-        deep_gen_s = 0.0
-        scope_n = None
         if deep:
             t_gen = time.monotonic()
             scope_docs, next_wm = self._deep_scope(full_deep)
-            deep_scope = "full" if scope_docs is None else "incremental"
+            res["deep_scope"] = "full" if scope_docs is None else "incremental"
             if scope_docs is not None:
-                scope_n = scope_docs.count()
+                res["scope_docs"] = scope_docs.count()
             de = self._deep_edges(scope_docs=scope_docs)
             # _deep_edges returns an eager localCheckpoint, so generation +
             # verify executed inside this window — the O(new docs) claim is
             # measured against deep_gen_s, not the compact() total (which
             # also pays the CC + cluster-rewrite below — itself scoped to
             # clusters the new edges touch since round 5).
-            deep_gen_s = time.monotonic() - t_gen
+            res["deep_gen_s"] = round(time.monotonic() - t_gen, 3)
             if de is not None:
                 # persist the deep-family discoveries into edge state FIRST:
                 # the edge store must stay the superset of every link any
@@ -822,17 +833,8 @@ class IncrementalNearDedup(IncrementalDedup):
                 if count_clusters
                 else None
             )
-            return {
-                "docs": n_docs,
-                "edges": n_edges,
-                "clusters_before": n_before,
-                "clusters_after": n_before,
-                "merged": 0,
-                "deep_scope": deep_scope,
-                "deep_gen_s": round(deep_gen_s, 3),
-                "scope_docs": scope_n,
-                "cc_mode": "scoped" if scoped else "full",
-            }
+            res.update(clusters_before=n_before, clusters_after=n_before, merged=0)
+            return res
         t_cc = time.monotonic()
         if scoped:
             # Scope the CC to the clusters the new edges TOUCH (round-5):
@@ -925,18 +927,13 @@ class IncrementalNearDedup(IncrementalDedup):
             F.col("cluster_id") != F.col("prior_cluster")
         ).limit(1).count():
             self._advance_watermarks(deep, next_wm, epoch_hi)
-            return {
-                "docs": n_docs,
-                "edges": n_edges,
-                "clusters_before": n_before,
-                "clusters_after": n_before,
-                "merged": 0,
-                "deep_scope": deep_scope,
-                "deep_gen_s": round(deep_gen_s, 3),
-                "scope_docs": scope_n,
-                "cc_mode": "scoped" if scoped else "full",
-                "cc_rewrite_s": round(time.monotonic() - t_cc, 3),
-            }
+            res.update(
+                clusters_before=n_before,
+                clusters_after=n_before,
+                merged=0,
+                cc_rewrite_s=round(time.monotonic() - t_cc, 3),
+            )
+            return res
         tmp = self.cluster_dir + ".compact-tmp"
         touched_n = None
         if scoped:
@@ -993,20 +990,14 @@ class IncrementalNearDedup(IncrementalDedup):
         # re-covers this scope next pass (idempotent via the edge anti-join
         # and the relabel-to-same-minima CC)
         self._advance_watermarks(deep, next_wm, epoch_hi)
-        n_after = (n_before - merged) if n_before is not None else None
-        return {
-            "docs": n_docs,
-            "edges": n_edges,
-            "clusters_before": n_before,
-            "clusters_after": n_after,
-            "merged": merged,
-            "deep_scope": deep_scope,
-            "deep_gen_s": round(deep_gen_s, 3),
-            "scope_docs": scope_n,
-            "cc_mode": "scoped" if scoped else "full",
-            "touched_parts": touched_n,
-            "cc_rewrite_s": round(time.monotonic() - t_cc, 3),
-        }
+        res.update(
+            clusters_before=n_before,
+            clusters_after=(n_before - merged) if n_before is not None else None,
+            merged=merged,
+            touched_parts=touched_n,
+            cc_rewrite_s=round(time.monotonic() - t_cc, 3),
+        )
+        return res
 
     def _advance_watermarks(self, deep: bool, next_wm, epoch_hi: int | None) -> None:
         """``epoch_hi=None`` advances the deep watermark only: a pass that

@@ -464,6 +464,44 @@ def test_resume_after_crash_at_edges_commit_matches_uninterrupted_run(
     shutil.rmtree(wh)
 
 
+def test_copied_warehouse_reads_and_expires_only_its_own_snapshots(spark):
+    """Log entries keep the absolute ``path`` they were committed with; a
+    copy of the warehouse still reads its own files and, on a re-commit,
+    deletes only its own superseded dir, never the original's."""
+    wh = tempfile.mkdtemp(prefix="wh-orig-")
+    orig = CheckpointStore(spark, wh)
+    orig.write("extract", spark.range(3), "fp", key_col="id")
+    copy_wh = tempfile.mkdtemp(prefix="wh-copy-")
+    shutil.copytree(wh, copy_wh, dirs_exist_ok=True)
+    copy = CheckpointStore(spark, copy_wh)
+    files = copy.read("extract").inputFiles()
+    assert files and all(copy_wh in f for f in files)
+    copy.write("extract", spark.range(5), "fp", key_col="id")
+    assert os.path.isdir(os.path.join(wh, "extract", "snap-1"))
+    assert orig.read("extract").count() == 3 and orig.has_snapshot("extract", "fp")
+    assert not os.path.isdir(os.path.join(copy_wh, "extract", "snap-1"))
+    assert copy.read("extract").count() == 5
+    assert copy.manifest("extract").agg(F.sum("rows")).first()[0] == 5
+    shutil.rmtree(wh)
+    shutil.rmtree(copy_wh)
+
+
+def test_shuffle_partitions_leaves_fingerprints_unchanged(spark):
+    """No operator reads ``shuffle_partitions``, so a resume at another
+    session width reuses every snapshot; a config field that shapes output
+    still changes every fingerprint."""
+    store = CheckpointStore(spark, tempfile.mkdtemp(prefix="wh-fp-"))
+
+    def fps(cfg):
+        pipe = DedupPipeline(spark, store, cfg, input_fingerprint="x")
+        return [pipe.fingerprint(s) for s in STAGES]
+
+    assert fps(DedupConfig(shuffle_partitions=8)) == fps(DedupConfig(shuffle_partitions=16))
+    changed = fps(DedupConfig(shuffle_partitions=8, jaccard_threshold=0.9))
+    assert all(a != b for a, b in zip(fps(DedupConfig(shuffle_partitions=8)), changed))
+    shutil.rmtree(store.warehouse)
+
+
 def test_config_change_invalidates_fingerprints(spark):
     wh = tempfile.mkdtemp(prefix="wh-ck4-")
     store = CheckpointStore(spark, wh)

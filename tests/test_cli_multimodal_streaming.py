@@ -665,6 +665,100 @@ def test_compact_swap_crash_recovery(spark):
     shutil.rmtree(state)
 
 
+class _CrashOnce:
+    """Raises on the first call whose arguments match ``when`` (after
+    ``before`` ran on them), then delegates to ``fn``."""
+
+    def __init__(self, fn, when, before=lambda *a: None):
+        self.fn, self.when, self.before, self.fired = fn, when, before, False
+
+    def __call__(self, *args, **kwargs):
+        if not self.fired and self.when(*args):
+            self.fired = True
+            self.before(*args)
+            raise OSError("injected crash")
+        return self.fn(*args, **kwargs)
+
+
+def _rmtree_one_part(path):
+    """A partial ``.pre-compact`` delete: its first partition dir only."""
+    part = sorted(d for d in os.listdir(path) if d.startswith("dpart="))[0]
+    shutil.rmtree(os.path.join(path, part))
+
+
+def test_compact_crash_schedule_recovers_to_uninterrupted_state(spark, monkeypatch):
+    """A crash at each swap point of a scoped compact (after the tmp write
+    and hardlinks, after each rename, inside the ``.pre-compact`` delete,
+    at the watermark advance), then a reopen and a second compact, ends in
+    the clusters and reflected edge epoch of an uninterrupted compact."""
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    cfg = DedupConfig(shuffle_partitions=8)
+    base = tempfile.mkdtemp(prefix="compact-sched-")
+    inc = IncrementalNearDedup(spark, base, cfg, n_state_buckets=8)
+    spark.createDataFrame(
+        [(d, d) for d in range(1, 13)], "doc_id long, cluster_id long"
+    ).withColumn("dpart", inc._part("doc_id")).write.partitionBy("dpart").parquet(
+        inc.cluster_dir
+    )
+    edges = "id1 long, id2 long, batch_id int, epoch int"
+    spark.createDataFrame([(1, 2, 0, inc._edge_epoch())], edges).write.parquet(inc.edge_dir)
+    inc.compact()  # the full base case; the next compact is scoped
+    spark.createDataFrame(
+        [(2, 7, 1, inc._edge_epoch()), (5, 9, 1, inc._edge_epoch())], edges
+    ).write.mode("append").parquet(inc.edge_dir)
+
+    def opened(tag):
+        state = tempfile.mkdtemp(prefix=f"compact-{tag}-")
+        shutil.copytree(base, state, dirs_exist_ok=True)
+        return state, IncrementalNearDedup(spark, state, cfg, n_state_buckets=8)
+
+    def snapshot(i):
+        return sorted((r["doc_id"], r["cluster_id"]) for r in i.clusters().collect()), i._cc_epoch()
+
+    ref_state, ref = opened("ref")
+    assert ref.compact()["cc_mode"] == "scoped"
+    want = snapshot(ref)
+    assert want[1] == 2 and dict(want[0])[7] == 1 and dict(want[0])[9] == 5
+    shutil.rmtree(ref_state)
+
+    schedule = {
+        "after tmp write and links": (
+            os, "rename", _CrashOnce(os.rename, lambda s, d: d.endswith(".pre-compact"))
+        ),
+        "after cluster_dir to .pre-compact": (
+            os, "rename", _CrashOnce(os.rename, lambda s, d: s.endswith(".compact-tmp"))
+        ),
+        "after tmp to cluster_dir": (
+            shutil, "rmtree", _CrashOnce(shutil.rmtree, lambda p, *a: p.endswith(".pre-compact"))
+        ),
+        "at .pre-compact rmtree": (
+            shutil,
+            "rmtree",
+            _CrashOnce(
+                shutil.rmtree, lambda p, *a: p.endswith(".pre-compact"), _rmtree_one_part
+            ),
+        ),
+        # the watermark advance commits by replacing the compact meta file
+        "at _advance_watermarks": (
+            os, "replace", _CrashOnce(os.replace, lambda s, d: d.endswith("_compact_meta.json"))
+        ),
+    }
+    for step, (target, name, fault) in schedule.items():
+        state, crashing = opened("crash")
+        with monkeypatch.context() as m:
+            m.setattr(target, name, fault)
+            with pytest.raises(OSError, match="injected"):
+                crashing.compact()
+        assert fault.fired, step
+        reopened = IncrementalNearDedup(spark, state, cfg, n_state_buckets=8)
+        reopened.compact()
+        assert snapshot(reopened) == want, step
+        assert not os.path.isdir(reopened.cluster_dir + ".pre-compact"), step
+        shutil.rmtree(state)
+    shutil.rmtree(base)
+
+
 def test_deep_compact_dedups_reversed_stored_edges(spark):
     """Round-4 review: stream new-old edges are stored (new_id, old_id) in
     arbitrary order; deep compaction rediscovers them in canonical order and

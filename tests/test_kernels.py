@@ -14,7 +14,6 @@ from infoscience_imports_spark.functions.shingles import (
 from infoscience_imports_spark.functions.simhash import (
     hamming64,
     simhash64,
-    simhash_bands,
 )
 from infoscience_imports_spark.sources.synthetic import _rng, _vocab
 
@@ -77,18 +76,6 @@ def test_simhash_near_titles_close_far_titles_far():
     assert hamming64(f0, f0) == 0
     assert hamming64(f0, f1) < hamming64(f0, f2)
     assert hamming64(f0, f2) > 10  # random titles are far apart
-
-
-def test_simhash_band_pigeonhole():
-    """Any fingerprint pair within Hamming radius n_bands-1 shares a band."""
-    rng = _rng("bands", 3)
-    for _ in range(200):
-        fp = rng.getrandbits(64)
-        flipped = fp
-        for _ in range(3):  # radius 3, 4 bands
-            flipped ^= 1 << rng.randrange(64)
-        b1, b2 = simhash_bands(fp, 4), simhash_bands(flipped, 4)
-        assert any(x == y for x, y in zip(b1, b2))
 
 
 def test_simhash_block_combination_pigeonhole():
