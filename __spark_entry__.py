@@ -39,7 +39,6 @@ from infoscience_imports_spark.operators.textops import (
     STOPWORDS,
     TOKEN_PATTERN,
     bpe_ish_count,
-    lang_id_col,
     quality_features,
     token_count,
     tokens_col,
@@ -351,7 +350,10 @@ def q_dedup_simhash_title(spark, sf_dir):
             docs, CFG, text_col="text_norm", id_col="doc_id", include_shingles=False
         )
     )
-    cand = lsh.simhash_candidate_pairs(sg, CFG)
+    pairs, small = verify.gate_broadcast_info(
+        lsh.simhash_band_pairs(sg, CFG), CFG.broadcast_pair_limit
+    )
+    cand = lsh.hamming_edges(pairs, sg, CFG, gated=small)
     j = (
         cand.join(pf.select(F.col("doc_id").alias("id1"), F.col("ps").alias("ps1")), on="id1")
         .join(pf.select(F.col("doc_id").alias("id2"), F.col("ps").alias("ps2")), on="id2")

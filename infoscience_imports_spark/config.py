@@ -12,7 +12,7 @@ Generalizes the reference's fixed dedup configuration (source priority list at
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 
 
 @dataclass(frozen=True)

@@ -13,9 +13,10 @@ Byte-identity strategy: all character classes are pure-ASCII, so Python
 ``str.lower`` and Java ``Lower`` agree on every affected byte; non-ASCII
 characters pass through both engines untouched by the regex classes used.
 
-Everything is a Column expression (whole-stage codegen, no Python in the hot
-path); the pure-Python twins exist only as test oracles and for driver-side
-use.
+The Column expressions serve the streaming paths and the CLI. The
+pure-Python twins are the test oracles, and they are also the batch hot path:
+the pipeline's extract stage and the shingle kernels (``operators/textops.py``,
+``operators/decontaminate.py``) call them inside Arrow workers.
 """
 
 from __future__ import annotations
@@ -129,7 +130,6 @@ def fold_diacritics_col(col: Column) -> Column:
     (vectorized) Python kernel is the right call. Byte-identical to the
     Python oracle by construction — it calls it.
     """
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")

@@ -212,21 +212,3 @@ def hamming_edges(
         .filter(F.col("hamming") <= cfg.simhash_hamming_max)
         .select("id1", "id2", "hamming")
     )
-
-
-def simhash_candidate_pairs(
-    signatures: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """SimHash path: distinct (id1, id2) with Hamming(simhash) <= radius.
-
-    Exact within ``cfg.simhash_hamming_max`` by the block-combination
-    pigeonhole (:func:`simhash_band_pairs`). Standalone form
-    (queries/tests): gates its own pair list; the pipeline gates one unioned
-    candidate frame instead and calls :func:`hamming_edges` directly.
-    """
-    from .verify import gate_broadcast_info
-
-    pairs, gated = gate_broadcast_info(
-        simhash_band_pairs(signatures, cfg), cfg.broadcast_pair_limit
-    )
-    return hamming_edges(pairs, signatures, cfg, gated=gated)

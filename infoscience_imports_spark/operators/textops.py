@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_text_col
-
 # deliberately small, deterministic marker lists (shared with oracle SQL)
 LANG_MARKERS = {
     "en": ("the", "and", "of"),

@@ -24,7 +24,6 @@ Physical-plan notes (designed for 100 TB, verified on local[32]):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -38,8 +37,6 @@ from ..operators import lsh
 from ..operators import signatures as sigs
 from ..operators import verify
 from ..operators.edges import edge_families
-from ..session import path_bytes
-from ..functions.text import extract_text_col, normalize_text_col
 from ..sources.catalog import CheckpointStore, chain_fingerprint
 
 STAGES = ("extract", "signatures", "buckets", "edges", "components")
@@ -226,47 +223,6 @@ class DedupPipeline:
         docs = extract_df.select("doc_id")
         return comp.attach_clusters(docs, assign).select("doc_id", "cluster_id")
 
-    # -- scan-split tuning ------------------------------------------------------
-    _STAGE_SCAN_INPUT = {
-        "signatures": "extract",
-        "buckets": "signatures",
-        "edges": "extract",  # dominant scan: rep_texts from the extract snapshot
-        "components": "edges",
-    }
-
-    def _tune_scan_splits(self, stage: str) -> None:
-        """Size ``maxPartitionBytes`` to ~4 scan splits per core for THIS
-        stage's dominant input snapshot, clamped to [1 MB, 128 MB].
-
-        The kernel-heavy stages read snapshots of very different sizes (raw
-        html vs extracted text vs narrow buckets); one session-wide split
-        size either starves the big scan or shreds the small one into
-        hundreds of tasks that each pay the ~100 ms Arrow worker handshake.
-        The 1 MB floor wins below ``4 * cores`` MB of input, so a small
-        snapshot gets about one split per core, not four (the 1.7-3.6 MB
-        extract snapshot of 2000 pages reads in 4-5 splits on 4 cores).
-        The size comes from the Hadoop ``FileSystem`` of the snapshot path
-        (``session.path_bytes``), so object-store warehouses are sized the
-        same way; when it is unknown or zero the session setting stands.
-        """
-        src = self._STAGE_SCAN_INPUT.get(stage)
-        if src is None:
-            return
-        entry = self.store.live_entry(src, self.fingerprint(src))
-        total = (
-            path_bytes(self.spark, os.path.join(self.store.snapshot_dir(src, entry), "data"))
-            if entry
-            else None
-        )
-        if total is None:
-            return
-        par = self.spark.sparkContext.defaultParallelism
-        split = min(128 << 20, max(1 << 20, total // (4 * par)))
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        self.spark.conf.set(
-            "spark.sql.files.openCostInBytes", str(min(split // 4, 1 << 20))
-        )
-
     # -- driver ---------------------------------------------------------------
     def run(
         self,
@@ -275,8 +231,6 @@ class DedupPipeline:
         resume: bool = True,
     ) -> PipelineResult:
         res = PipelineResult(run_id=self.store.run_id)
-        prev_split = self.spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        prev_open = self.spark.conf.get("spark.sql.files.openCostInBytes", None)
         try:
             for stage in STAGES:
                 fp = self.fingerprint(stage)
@@ -287,7 +241,6 @@ class DedupPipeline:
                     res.timings[stage] = 0.0
                     continue
                 t0 = time.monotonic()
-                self._tune_scan_splits(stage)
                 df, key = self._build_stage(stage, pages)
                 # the edges entry records its measured broadcast gate
                 gates = None
@@ -308,13 +261,8 @@ class DedupPipeline:
                 res.timings[stage] = time.monotonic() - t0
                 res.rows[stage] = info.rows
         finally:
-            # a failed stage must not leave its persists or its tuned
-            # split size in the session
+            # a failed stage must not leave its persists in the session
             release_all()
-            if prev_split is not None:
-                self.spark.conf.set("spark.sql.files.maxPartitionBytes", prev_split)
-            if prev_open is not None:
-                self.spark.conf.set("spark.sql.files.openCostInBytes", prev_open)
         return res
 
     def _build_stage(self, stage: str, pages: DataFrame) -> tuple[DataFrame, str]:

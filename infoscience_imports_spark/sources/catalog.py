@@ -50,7 +50,6 @@ import shutil
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -94,8 +93,7 @@ class SnapshotInfo:
 class CheckpointStore:
     def __init__(self, spark: SparkSession, warehouse: str, run_id: str | None = None):
         self.spark = spark
-        # absolute, so log paths and manifest file URIs do not depend on the
-        # working directory
+        # absolute, so log paths do not depend on the working directory
         self.warehouse = os.path.abspath(warehouse)
         self.run_id = run_id or uuid.uuid4().hex[:12]
         os.makedirs(self.warehouse, exist_ok=True)
@@ -370,7 +368,13 @@ class CheckpointStore:
         return entries[-1]["fingerprint"] if entries else None
 
     def manifest(self, stage: str | None = None) -> DataFrame:
-        """Lineage rows of the latest snapshot of each stage (or of one)."""
+        """Lineage rows of the latest snapshot of each stage (or of one).
+
+        A manifest names each data file relative to its snapshot; ``file``
+        is rebuilt from the manifest's own location as ``input_file_name()``
+        spells it, so a copied or moved warehouse lists its own files. A
+        ``file`` that already holds a URI (manifests committed before
+        relative names) is returned as stored."""
         paths = [
             os.path.join(self.snapshot_dir(st, e), "manifest.parquet")
             for st in ([stage] if stage else self.stages())
@@ -378,12 +382,19 @@ class CheckpointStore:
         ]
         if not paths:
             raise FileNotFoundError("no committed snapshots")
-        return self.spark.read.parquet(*paths)
+        data_dir = F.regexp_replace(F.input_file_name(), "manifest\\.parquet$", "data/")
+        m = self.spark.read.parquet(*paths)
+        return m.withColumn(
+            "file",
+            F.when(F.col("file").contains("/"), F.col("file")).otherwise(
+                F.concat(data_dir, F.col("file"))
+            ),
+        )
 
 
 def _footer_lineage(data_dir: str, key_col: str | None) -> list[dict]:
     """One lineage row per non-empty data file, from its Parquet footer:
-    ``file`` (URI, as ``input_file_name()`` spells it), ``rows``, and the
+    ``file`` (the name under the snapshot's ``data`` dir), ``rows``, and the
     key column's min/max over its row-group statistics, as strings (None
     without a key or statistics). Keys are integral or string columns, whose
     ``str`` matches Spark's cast to string."""
@@ -405,5 +416,5 @@ def _footer_lineage(data_dir: str, key_col: str | None) -> list[dict]:
         bounds = [(s.min, s.max) for s in stats if s is not None and s.has_min_max]
         lo = str(min(b[0] for b in bounds)) if bounds else None
         hi = str(max(b[1] for b in bounds)) if bounds else None
-        out.append({"file": Path(path).as_uri(), "rows": md.num_rows, "min_key": lo, "max_key": hi})
+        out.append({"file": name, "rows": md.num_rows, "min_key": lo, "max_key": hi})
     return out

@@ -81,9 +81,12 @@ class IncrementalDedup:
         underneath is a tracked persist: the caller ends the batch with
         ``release_all()``. No shingle arrays are computed — the per-batch
         verify recomputes them from ``text_norm``."""
+        # a page with NULL html is empty text, as in the batch extract stage
         ext = pages.select(
             F.xxhash64("url").alias("doc_id"),
-            normalize_text_col(extract_text_col(F.col("html"))).alias("text_norm"),
+            F.coalesce(
+                normalize_text_col(extract_text_col(F.col("html"))), F.lit("")
+            ).alias("text_norm"),
         )
         # persisted: the touched-buckets collect + the writes downstream
         # would otherwise each recompute the full signature kernel pass
@@ -1049,9 +1052,9 @@ class IncrementalNearDedup(IncrementalDedup):
         candidate count, thresholds and verify kernels (reference
         semantics: ``deduplicator.py:117-139`` cascade over a full
         re-harvest). Only those columns are scanned and cached; a doc whose
-        page had no html (NULL ``text_norm``) verifies as empty text and
-        stays a singleton. Returns a lineage-cut (id1, id2) frame, or
-        ``None`` with no state. The state scans are tracked persists, freed
+        page had no html holds the empty ``text_norm`` of the batch extract
+        stage and stays a singleton. Returns a lineage-cut (id1, id2) frame,
+        or ``None`` with no state. The state scans are tracked persists, freed
         by :meth:`compact`'s ``release_all()``.
 
         ``scope_docs`` (incremental mode): a frame of doc_ids admitted since

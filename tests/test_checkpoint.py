@@ -6,6 +6,7 @@ import shutil
 import tempfile
 import threading
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -484,6 +485,45 @@ def test_copied_warehouse_reads_and_expires_only_its_own_snapshots(spark):
     assert copy.manifest("extract").agg(F.sum("rows")).first()[0] == 5
     shutil.rmtree(wh)
     shutil.rmtree(copy_wh)
+
+
+def test_copied_warehouse_manifest_names_only_its_own_files(spark):
+    """The manifest names data files relative to their snapshot, so a
+    copied warehouse's lineage lists the copy's files, spelled as
+    ``input_file_name()`` spells them; a manifest that stored URIs (written
+    before relative names) is returned as stored."""
+    wh = tempfile.mkdtemp(prefix="wh-orig-")
+    CheckpointStore(spark, wh).write("t", spark.range(0, 10, 1, 2), "fp", key_col="id")
+    copy_wh = tempfile.mkdtemp(prefix="wh-copy-")
+    shutil.copytree(wh, copy_wh, dirs_exist_ok=True)
+    copy = CheckpointStore(spark, copy_wh)
+    files = sorted(r["file"] for r in copy.manifest("t").collect())
+    ref = copy.read("t").select(F.input_file_name().alias("f")).distinct()
+    assert len(files) == 2 and files == sorted(r["f"] for r in ref.collect())
+    assert all(copy_wh in f and wh not in f for f in files)
+    # a manifest committed with URIs in ``file`` reads unchanged
+    man = os.path.join(copy.snapshot_dir("t", copy.live_entry("t")), "manifest.parquet")
+    old = pq.read_table(man)
+    uris = [f"file://{wh}/t/snap-1/data/{n}" for n in old.column("file").to_pylist()]
+    pq.write_table(old.set_column(0, "file", pa.array(uris)), man)
+    assert sorted(r["file"] for r in copy.manifest("t").collect()) == sorted(uris)
+    shutil.rmtree(wh)
+    shutil.rmtree(copy_wh)
+
+
+def test_pipeline_run_sets_no_spark_conf(spark, tiny_pages, monkeypatch):
+    """Every scan follows the session's one split policy: a full run sets
+    no runtime conf."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: calls.append((k, v)))
+    wh = tempfile.mkdtemp(prefix="wh-noconf-")
+    pipe = DedupPipeline(spark, CheckpointStore(spark, wh), DedupConfig(), input_fingerprint="ck200")
+    r = pipe.run(pipeline_input(tiny_pages))
+    assert all(r.timings[s] > 0 for s in STAGES)
+    assert calls == []
+    shutil.rmtree(wh)
 
 
 def test_shuffle_partitions_leaves_fingerprints_unchanged(spark):

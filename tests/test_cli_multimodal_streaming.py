@@ -174,10 +174,10 @@ def test_incremental_lsh_links_neardup_to_earlier_cluster(spark):
 
 
 def test_deep_compact_every_batch_with_null_html_page(spark):
-    """A page with NULL html is stored with a NULL text_norm. Deep
-    compaction after every batch still runs over that state: the next
-    batch's near-dup joins the earlier cluster and the NULL-html doc stays
-    a singleton."""
+    """A page with NULL html is stored with the empty text_norm of the
+    batch extract stage. Deep compaction after every batch still runs over
+    that state: the next batch's near-dup joins the earlier cluster and the
+    NULL-html doc stays a singleton."""
     import datetime
 
     from infoscience_imports_spark.sources.synthetic import render_html
@@ -209,6 +209,39 @@ def test_deep_compact_every_batch_with_null_html_page(spark):
     cl = {r["doc_id"]: r["cluster_id"] for r in inc.clusters().collect()}
     assert cl[mirror] == cl[a]
     assert cl[empty] == empty
+    shutil.rmtree(state)
+
+
+def test_stream_extracts_null_html_as_empty_text_like_batch(spark):
+    """The batch extract stage reads a page with NULL html as empty text, the
+    text of a page without a main block; the stream does too, so it admits
+    the two as one exact duplicate."""
+    import datetime
+
+    from infoscience_imports_spark.sources.synthetic import render_html
+    from infoscience_imports_spark.streaming.incremental import IncrementalNearDedup
+
+    state = tempfile.mkdtemp(prefix="stream-empty-text-")
+    inc = IncrementalNearDedup(spark, state, DedupConfig(shuffle_partitions=8), n_state_buckets=8)
+    ts = datetime.datetime(2026, 1, 1)
+    text = " ".join(f"tok{i:03d}" for i in range(50))
+    pages = [
+        ("https://null.test/1", ts, None, "en"),
+        ("https://nomain.test/1", ts, bytearray(b"<html><body>no main</body></html>"), "en"),
+        ("https://a.test/1", ts, bytearray(render_html(text, "t")), "en"),
+    ]
+    inc.process_batch(
+        spark.createDataFrame(pages, "url string, warc_ts timestamp, html binary, lang string"), 0
+    )
+    ids = dict(
+        spark.createDataFrame([(p[0],) for p in pages], "url string")
+        .select("url", F.xxhash64("url"))
+        .collect()
+    )
+    empty_rep = min(ids["https://null.test/1"], ids["https://nomain.test/1"])
+    assert sorted(r["doc_id"] for r in inc.unique_docs().collect()) == sorted(
+        [empty_rep, ids["https://a.test/1"]]
+    )
     shutil.rmtree(state)
 
 

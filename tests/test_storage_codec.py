@@ -2,8 +2,8 @@
 
 Every Parquet file the engine writes follows the session codec (zstd, set in
 ``session.get_spark``); snapshots and state dirs written with another codec
-stay readable and resumable. The size probe behind the scan-split gates
-fails closed.
+stay readable and resumable. The size probe behind the entry queries'
+repartition gate fails closed.
 """
 
 import datetime
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from infoscience_imports_spark import caching
 from infoscience_imports_spark.config import DedupConfig
-from infoscience_imports_spark.plans import pipeline as pipeline_mod
 from infoscience_imports_spark.plans.pipeline import DedupPipeline
 from infoscience_imports_spark.session import path_bytes
 from infoscience_imports_spark.sources.catalog import CheckpointStore
@@ -192,25 +191,3 @@ def test_entry_dedup_adds_no_repartition_when_size_unknown(spark, monkeypatch):
         E.release_caches()
     assert "RoundRobinPartitioning" not in plan
     shutil.rmtree(root)
-
-
-def test_tune_scan_splits_leaves_conf_when_size_unknown(spark, monkeypatch):
-    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
-    before = {k: spark.conf.get(k) for k in keys}
-    pipe = DedupPipeline(
-        spark, CheckpointStore(spark, tempfile.mkdtemp(prefix="wh-tune-")), DedupConfig()
-    )
-    try:
-        # the split is sized from the live extract snapshot's data dir
-        pipe.store.write("extract", spark.range(1), pipe.fingerprint("extract"))
-        monkeypatch.setattr(pipeline_mod, "path_bytes", lambda spark, path: None)
-        pipe._tune_scan_splits("signatures")
-        assert {k: spark.conf.get(k) for k in keys} == before
-        # a measured size does move the split
-        monkeypatch.setattr(pipeline_mod, "path_bytes", lambda spark, path: 64 << 30)
-        pipe._tune_scan_splits("signatures")
-        assert spark.conf.get(keys[0]) != before[keys[0]]
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)
-        shutil.rmtree(pipe.store.warehouse, ignore_errors=True)
